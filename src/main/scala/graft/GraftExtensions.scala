@@ -10,7 +10,7 @@ import graft.functions._
 /** SQL surface for the engine's custom Catalyst expressions.
   *
   * Production path: `--conf spark.sql.extensions=graft.GraftExtensions`
-  * (or `SparkSession.builder.withExtensions(new GraftExtensions)`) makes
+  * (or `Session.create(_.withExtensions(new GraftExtensions))`) makes
   * the functions resolvable by the analyzer in every session of the
   * application, so pure-SQL users get the native codegen kernels without
   * touching the Column API. [[GraftExtensions.install]] is the programmatic

@@ -33,15 +33,19 @@ object Tables {
 
   /** On-disk bytes of a harness table (file or directory) — the input-size
     * signal scale-gated persists key on (a near-corpus-sized cache is a win
-    * at bench scale and a spill hazard at 100 TB). 0 when unreadable: the
-    * gate then conservatively treats the input as small.
+    * at bench scale and a spill hazard at 100 TB). Fails CLOSED: when the
+    * table is not a readable local file or directory (missing, or a
+    * remote `s3a://` path) the size is unknown and reads as Long.MaxValue,
+    * above any cap, so the gate takes its recompute branch.
     */
   def inputBytes(sfDir: String, name: String): Long = {
-    def sizeOf(f: java.io.File): Long =
-      if (f.isDirectory) Option(f.listFiles()).map(_.map(sizeOf).sum).getOrElse(0L)
-      else f.length()
-    try sizeOf(new java.io.File(sfDir, s"$name.parquet"))
-    catch { case _: Throwable => 0L }
+    def sizeOf(f: java.io.File): Option[Long] =
+      if (f.isDirectory) Option(f.listFiles()).flatMap(_.foldLeft(Option(0L)) {
+        (acc, c) => for (a <- acc; b <- sizeOf(c)) yield a + b
+      })
+      else Some(f.length()).filter(_ => f.isFile && f.canRead)
+    try sizeOf(new java.io.File(sfDir, s"$name.parquet")).getOrElse(Long.MaxValue)
+    catch { case _: Throwable => Long.MaxValue }
   }
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 

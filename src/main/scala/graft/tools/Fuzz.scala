@@ -414,36 +414,10 @@ object Fuzz {
     val Array(sfDir, outDir) = args
     val seed = sys.env.getOrElse("SPARK_GRAFT_FUZZ_SEED", "7").toLong
     val per = sys.env.getOrElse("SPARK_GRAFT_FUZZ_CASES", "100").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
+    val spark = graft.Session.create()
     val cs = cases(seed, per)
-    cs.foreach { c =>
-      try c.df(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/${c.name}")
-      catch { case e: Throwable =>
-        System.err.println(s"[fuzz] ${c.name} failed: ${e.getMessage}")
-      }
-    }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case ch if ch < ' ' => f"\\u${ch.toInt}%04x"
-      case ch => ch.toString
-    } + "\""
-    val json = cs.map(c => s"${q(c.name)}: ${q(c.sql)}").mkString("{", ",", "}")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$outDir/oracle_sql.json"), json)
+    graft.Verify.dump(spark, sfDir, outDir, "fuzz",
+      cs.map(c => c.name -> (c.df _)), cs.map(c => c.name -> c.sql))
     spark.stop()
   }
 }

@@ -6,9 +6,10 @@ import java.nio.file.{Files, Paths}
 /** Optimization-round measurement harness (guide §1): for each named
   * declared query, capture `.explain("formatted")` to
   * `<outDir>/<query>_<tag>.txt` and time `passes` noop-sink runs after one
-  * warmup, printing per-query min/median wall seconds. Same session shape
-  * as Bench (local[$SPARK_GRAFT_CPUS], shuffle.partitions=cpus, UTC) so the
-  * plans and timings match what the bench sees.
+  * warmup, printing per-query min/median wall seconds. Runs on the shared
+  * [[graft.Session]], so the plans and timings match what the bench sees.
+  * `passes = 0` writes the formatted plan only (no warmup, no timing, no
+  * final-plan capture) — the plan-audit mode.
   *
   * Usage: runMain graft.tools.PlanDump <sfDir> <outDir> <tag> <q1,q2,...> [passes]
   */
@@ -19,19 +20,7 @@ object PlanDump {
     val tag = args(2)
     val names = args(3).split(",").map(_.trim).filter(_.nonEmpty)
     val passes = if (args.length > 4) args(4).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", (4 * 1024 * 1024).toString))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ui.retainedExecutions", "1")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.subexpressionElimination.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.create()
     Files.createDirectories(Paths.get(outDir))
 
     names.foreach { name =>
@@ -57,33 +46,35 @@ object PlanDump {
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       Files.writeString(Paths.get(outDir, s"${name}_$tag.txt"), plan)
-      def once(): Double = {
-        spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        q(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
+      if (passes > 0) {
+        def once(): Double = {
+          spark.catalog.clearCache()
+          val t0 = System.nanoTime()
+          q(spark, sfDir).write.format("noop").mode("overwrite").save()
+          (System.nanoTime() - t0) / 1e9
+        }
+        once() // warmup
+        val ts = (1 to passes).map(_ => once()).sorted
+        // true median: average the two middle elements for even pass
+        // counts (ts(n/2) alone is the upper-middle — biased high)
+        val med =
+          if (ts.size % 2 == 1) ts(ts.size / 2)
+          else (ts(ts.size / 2 - 1) + ts(ts.size / 2)) / 2.0
+        // Post-execution (AQE-final) plan: initial explain() hides runtime
+        // exchange/stage reuse, so recompute claims need the executed plan.
+        try {
+          val execs = spark.sharedState.statusStore.executionsList()
+          if (execs.nonEmpty)
+            Files.writeString(Paths.get(outDir, s"${name}_${tag}_final.txt"),
+              execs.last.physicalPlanDescription)
+          else
+            println(s"[plandump] WARNING: no executions retained for $name — ${name}_${tag}_final.txt not written")
+        } catch {
+          case e: Throwable =>
+            println(s"[plandump] WARNING: final-plan capture failed for $name: ${e.getMessage}")
+        }
+        println(f"[plandump] $name%-28s min ${ts.head}%.3fs med $med%.3fs ($tag)")
       }
-      once() // warmup
-      val ts = (1 to passes).map(_ => once()).sorted
-      // true median: average the two middle elements for even pass
-      // counts (ts(n/2) alone is the upper-middle — biased high)
-      val med =
-        if (ts.size % 2 == 1) ts(ts.size / 2)
-        else (ts(ts.size / 2 - 1) + ts(ts.size / 2)) / 2.0
-      // Post-execution (AQE-final) plan: initial explain() hides runtime
-      // exchange/stage reuse, so recompute claims need the executed plan.
-      try {
-        val execs = spark.sharedState.statusStore.executionsList()
-        if (execs.nonEmpty)
-          Files.writeString(Paths.get(outDir, s"${name}_${tag}_final.txt"),
-            execs.last.physicalPlanDescription)
-        else
-          println(s"[plandump] WARNING: no executions retained for $name — ${name}_${tag}_final.txt not written")
-      } catch {
-        case e: Throwable =>
-          println(s"[plandump] WARNING: final-plan capture failed for $name: ${e.getMessage}")
-      }
-      println(f"[plandump] $name%-28s min ${ts.head}%.3fs med $med%.3fs ($tag)")
     }
     spark.stop()
   }

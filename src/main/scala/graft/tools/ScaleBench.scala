@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -35,24 +35,17 @@ object ScaleBench {
 
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("SPARK_GRAFT_SCALE_N", "2000000").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // The bounded-heap top-k aggregate (ObjectHashAggregate) falls back
-      // to SORT-BASED aggregation past 128 distinct groups per partition
-      // (spark.sql.objectHashAggregate.sortBased.fallbackThreshold) — at
-      // Q=10k query groups that silently turns the brute-force kNN's
-      // partial aggregate into a full external sort of N*Q pair rows
-      // (measured: filled the disk at 2M x 10k). The heap state is what
-      // makes top-k bounded — Q heaps x 10 entries ≈ 1.6 MB at Q=10k —
-      // so the threshold, not the algorithm, is the scale knob here.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.Session.cpus
+    val spark = graft.Session.create()
+    // The bounded-heap top-k aggregate (ObjectHashAggregate) falls back
+    // to SORT-BASED aggregation past 128 distinct groups per partition
+    // (spark.sql.objectHashAggregate.sortBased.fallbackThreshold) — at
+    // Q=10k query groups that silently turns the brute-force kNN's
+    // partial aggregate into a full external sort of N*Q pair rows
+    // (measured: filled the disk at 2M x 10k). The heap state is what
+    // makes top-k bounded — Q heaps x 10 entries ≈ 1.6 MB at Q=10k —
+    // so the threshold, not the algorithm, is the scale knob here.
+    spark.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
     import spark.implicits._
 
     // ---- corpus synthesis: 28 body tokens drawn uniformly from a 50k
@@ -70,7 +63,7 @@ object ScaleBench {
       .withColumn("tail", when(pmod(col("doc_id"), lit(10)) === 9,
         concat(lit("z"), col("doc_id"))).otherwise(concat(lit("t"), pmod(xxhash64(col("eff") * 991L), lit(vocab)))))
       .select(col("doc_id"), concat_ws(" ", bodyFor(col("eff")), col("tail")).as("text"))
-    val docs = base.repartition(cpus.toInt * 2).persist(
+    val docs = base.repartition(cpus * 2).persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nd = docs.count() // materialize: generation cost excluded from op timings
 
@@ -1003,7 +996,7 @@ object ScaleBench {
                             injectedFound: Long, injected: Long)
     val containPoints = Seq(math.min(100000L, n), n).distinct.map { cn =>
       val cd = cdocsAll.where(col("doc_id") < cn)
-        .repartition(cpus.toInt * 2)
+        .repartition(cpus * 2)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       cd.count()
       val ((found, injectedFound), t) = timed(s"containment detection ($cn docs)") {

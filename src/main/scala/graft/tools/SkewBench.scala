@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Skew
 
@@ -21,13 +21,8 @@ import graft.operators.Skew
   */
 object SkewBench {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1") // force shuffle joins
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.create()
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force shuffle joins
     import spark.implicits._
 
     val nBig = 16L * 1000 * 1000

@@ -101,13 +101,7 @@ object ExtensionsSession {
       else {
         org.apache.spark.sql.SparkSession.clearActiveSession()
         org.apache.spark.sql.SparkSession.clearDefaultSession()
-        val s = org.apache.spark.sql.SparkSession.builder()
-          .master("local[4]")
-          .config("spark.sql.shuffle.partitions", "4")
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.ui.enabled", "false")
-          .withExtensions(new GraftExtensions)
-          .getOrCreate()
+        val s = Session.create(_.withExtensions(new GraftExtensions))
         org.apache.spark.sql.SparkSession.setDefaultSession(base)
         org.apache.spark.sql.SparkSession.setActiveSession(base)
         cached = s

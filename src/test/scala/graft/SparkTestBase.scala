@@ -3,22 +3,14 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (tests fork one JVM). */
+/** Shared local SparkSession for all suites (tests fork one JVM): the
+  * [[Session]] factory's session, so suites run under the settings the
+  * mains use. */
 object TestSpark {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // saveAsTable targets (bucketed-join tests) go to /tmp, not the repo
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val session: SparkSession =
+    // saveAsTable targets (bucketed-join tests) go to /tmp, not the repo
+    Session.create(_.config("spark.sql.warehouse.dir",
+      java.nio.file.Files.createTempDirectory("graft-warehouse").toString))
 }
 
 abstract class SparkTestBase extends AnyFunSuite {
