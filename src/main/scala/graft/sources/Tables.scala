@@ -12,24 +12,61 @@ import org.apache.spark.sql.types._
   * is a single pass and the schema is deterministic — at 100 TB an inference
   * pre-scan is a full extra read of the dataset.
   *
-  * Parquet testdata tables carry their own schema; readers below are thin and
-  * rely on Catalyst column pruning + filter pushdown reaching the scan.
+  * The harness parquet tables are read with declared schemas too (a schemaless
+  * parquet read runs one footer-reading Spark job per table read); TablesSpec
+  * pins each one to Spark's own inference on the files at every scale factor.
+  * Readers below are thin and rely on Catalyst column pruning + filter
+  * pushdown reaching the scan.
   */
 object Tables {
 
-  /** TPC-H-ish harness tables (TESTDATA.md). One parquet file per table. */
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** Schema of a harness table, as Spark infers it from the files: every
+    * field nullable, and the timestamps NTZ because the files are written
+    * with `isAdjustedToUTC=false`. */
+  private def schema(fields: (String, DataType)*): StructType =
+    StructType(fields.map { case (n, t) => StructField(n, t, nullable = true) })
 
-  def lineitem(s: SparkSession, d: String): DataFrame   = table(s, d, "lineitem")
-  def orders(s: SparkSession, d: String): DataFrame     = table(s, d, "orders")
-  def customer(s: SparkSession, d: String): DataFrame   = table(s, d, "customer")
-  def supplier(s: SparkSession, d: String): DataFrame   = table(s, d, "supplier")
-  def part(s: SparkSession, d: String): DataFrame       = table(s, d, "part")
-  def nation(s: SparkSession, d: String): DataFrame     = table(s, d, "nation")
-  def region(s: SparkSession, d: String): DataFrame     = table(s, d, "region")
-  def events(s: SparkSession, d: String): DataFrame     = table(s, d, "events")
-  def documents(s: SparkSession, d: String): DataFrame  = table(s, d, "documents")
+  private val Region = schema("r_regionkey" -> IntegerType, "r_name" -> StringType)
+  private val Nation = schema("n_nationkey" -> IntegerType, "n_name" -> StringType,
+    "n_regionkey" -> IntegerType)
+  private val Customer = schema("c_custkey" -> LongType, "c_name" -> StringType,
+    "c_nationkey" -> IntegerType, "c_acctbal" -> DoubleType, "c_mktsegment" -> StringType)
+  private val Supplier = schema("s_suppkey" -> LongType, "s_name" -> StringType,
+    "s_nationkey" -> IntegerType, "s_acctbal" -> DoubleType)
+  private val Part = schema("p_partkey" -> LongType, "p_name" -> StringType,
+    "p_brand" -> StringType, "p_type" -> StringType, "p_size" -> IntegerType,
+    "p_retailprice" -> DoubleType)
+  private val Orders = schema("o_orderkey" -> LongType, "o_custkey" -> LongType,
+    "o_orderstatus" -> StringType, "o_totalprice" -> DoubleType,
+    "o_orderdate" -> TimestampNTZType, "o_orderpriority" -> StringType)
+  private val Lineitem = schema("l_orderkey" -> LongType, "l_partkey" -> LongType,
+    "l_suppkey" -> LongType, "l_linenumber" -> IntegerType, "l_quantity" -> DoubleType,
+    "l_extendedprice" -> DoubleType, "l_discount" -> DoubleType, "l_tax" -> DoubleType,
+    "l_returnflag" -> StringType, "l_linestatus" -> StringType,
+    "l_shipdate" -> TimestampNTZType)
+  private val Events = schema("event_id" -> LongType, "ts" -> TimestampNTZType,
+    "user_id" -> LongType, "event_type" -> StringType, "value" -> DoubleType,
+    "props" -> StringType)
+  private val Documents = schema("doc_id" -> LongType, "text" -> StringType,
+    "lang" -> StringType, "source" -> StringType, "n_chars" -> LongType)
+  private val Embeddings = schema("vec_id" -> LongType,
+    "embedding" -> ArrayType(FloatType, containsNull = true), "label" -> IntegerType)
+
+  /** TPC-H-ish harness tables (TESTDATA.md). One parquet file per table. */
+  private def table(spark: SparkSession, sfDir: String, name: String,
+                    schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(s"$sfDir/$name.parquet")
+
+  def lineitem(s: SparkSession, d: String): DataFrame   = table(s, d, "lineitem", Lineitem)
+  def orders(s: SparkSession, d: String): DataFrame     = table(s, d, "orders", Orders)
+  def customer(s: SparkSession, d: String): DataFrame   = table(s, d, "customer", Customer)
+  def supplier(s: SparkSession, d: String): DataFrame   = table(s, d, "supplier", Supplier)
+  def part(s: SparkSession, d: String): DataFrame       = table(s, d, "part", Part)
+  def nation(s: SparkSession, d: String): DataFrame     = table(s, d, "nation", Nation)
+  def region(s: SparkSession, d: String): DataFrame     = table(s, d, "region", Region)
+  def events(s: SparkSession, d: String): DataFrame     = table(s, d, "events", Events)
+  def documents(s: SparkSession, d: String): DataFrame  = table(s, d, "documents", Documents)
+  def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings", Embeddings)
 
   /** On-disk bytes of a harness table (file or directory) — the input-size
     * signal scale-gated persists key on (a near-corpus-sized cache is a win
@@ -47,7 +84,6 @@ object Tables {
     try sizeOf(new java.io.File(sfDir, s"$name.parquet")).getOrElse(Long.MaxValue)
     catch { case _: Throwable => Long.MaxValue }
   }
-  def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 
   /** CSV scan with header + explicit schema; accepts a glob so a year of
     * monthly files is ONE distributed read, not a per-file driver loop

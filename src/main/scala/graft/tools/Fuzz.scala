@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.sources.Tables
+
 /** Differential query fuzzing: a small template grammar over the harness
   * tables, each generated case carrying BOTH a Spark builder and an
   * equivalent DuckDB oracle SQL. 195 fixed queries prove 195 fixed plans;
@@ -50,7 +52,7 @@ object Fuzz {
   }
 
   private def li(s: SparkSession, d: String) =
-    s.read.parquet(s"$d/lineitem.parquet")
+    Tables.lineitem(s, d)
       .select(col("l_orderkey"), col("l_linenumber").cast("long").as("l_linenumber"),
         col("l_quantity").cast("long").as("qty"),
         round(col("l_extendedprice") * 100).cast("long").as("price_c"),
@@ -155,10 +157,10 @@ object Fuzz {
          |WHERE CAST(round(o_totalprice * 100) AS BIGINT) >= $pc
          |GROUP BY 1""".stripMargin
     def df(s: SparkSession, d: String): DataFrame = {
-      val o = s.read.parquet(s"$d/orders.parquet")
+      val o = Tables.orders(s, d)
         .withColumn("price_c", round(col("o_totalprice") * 100).cast("long"))
         .filter(col("price_c") >= pc)
-      val c = s.read.parquet(s"$d/customer.parquet")
+      val c = Tables.customer(s, d)
         .select(col("c_custkey"), col("c_nationkey").cast("long").as("c_nationkey"),
           col("c_mktsegment"))
       o.join(c, col("o_custkey") === col("c_custkey"))
@@ -200,7 +202,7 @@ object Fuzz {
         case 1 => month(col("o_orderdate").cast("date"))
         case 2 => dayofmonth(col("o_orderdate").cast("date"))
       }
-      s.read.parquet(s"$d/orders.parquet")
+      Tables.orders(s, d)
         .filter(col("o_orderkey") % modulus === residue)
         .select(col("o_orderkey"), sCol.as("s"), dCol.cast("long").as("dpart"),
           datediff(col("o_orderdate").cast("date"),
@@ -301,14 +303,14 @@ object Fuzz {
          |       ${jtSql(jt2)} nation ON c_nationkey = n_nationkey
          |GROUP BY 1""".stripMargin
     def df(s: SparkSession, d: String): DataFrame = {
-      val o = s.read.parquet(s"$d/orders.parquet")
+      val o = Tables.orders(s, d)
         .select(col("o_orderkey"),
           when(col("o_orderkey") % mod === res, lit(null))
             .otherwise(col("o_custkey")).as("ck"),
           round(col("o_totalprice") * 100).cast("long").as("price_c"))
-      val c = s.read.parquet(s"$d/customer.parquet")
+      val c = Tables.customer(s, d)
         .select(col("c_custkey"), col("c_nationkey"))
-      val nt = s.read.parquet(s"$d/nation.parquet")
+      val nt = Tables.nation(s, d)
         .select(col("n_nationkey"), col("n_name"))
       o.join(c, col("ck") === col("c_custkey"), jt1)
         .join(nt, col("c_nationkey") === col("n_nationkey"), jt2)
@@ -347,10 +349,10 @@ object Fuzz {
          |GROUP BY 1""".stripMargin
     def df(s: SparkSession, d: String): DataFrame = {
       val a = li(s, d).select(col("l_orderkey").as("k"), col("qty"), col("price_c"))
-      val b = s.read.parquet(s"$d/orders.parquet")
+      val b = Tables.orders(s, d)
         .filter(round(col("o_totalprice") * 100).cast("long") >= pcMin)
         .select(col("o_orderkey").as("k"), col("o_orderstatus").as("st"))
-      val c = s.read.parquet(s"$d/orders.parquet")
+      val c = Tables.orders(s, d)
         .filter(col("o_orderkey") % mod2 === res2)
         .select(col("o_orderkey").as("k"), col("o_orderpriority").as("pri"))
       a.join(b, Seq("k"), jt1).join(c, Seq("k"), jt2)

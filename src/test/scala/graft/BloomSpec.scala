@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.{Bloom, NativeText}
+import graft.sources.Tables
 
 /** Bloom semi-join pruning (q77): the filter must be a SUPERSET test
   * (zero false negatives — that is the exactness contract that lets q77
@@ -22,7 +23,7 @@ class BloomSpec extends SparkTestBase {
   }
 
   test("bloom membership: no false negatives, real pruning on disjoint keys") {
-    val grams = spark.read.parquet(s"$sf/documents.parquet")
+    val grams = Tables.documents(spark, sf)
       .select(explode(NativeText.wordNgrams(col("text"), 13)).as("gram"))
       .distinct()
     val bf = grams

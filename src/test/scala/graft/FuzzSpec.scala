@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.sources.Tables
 import graft.tools.Fuzz
 import graft.tools.Fuzz._
 
@@ -21,7 +22,7 @@ class FuzzSpec extends SparkTestBase {
   private case class Li(ok: Long, ln: Long, qty: Long, pc: Long,
                         rf: String, ls: String)
   private lazy val lis: Seq[Li] =
-    spark.read.parquet(s"$sf/lineitem.parquet")
+    Tables.lineitem(spark, sf)
       .select(col("l_orderkey"), col("l_linenumber").cast("long"),
         col("l_quantity").cast("long"),
         round(col("l_extendedprice") * 100).cast("long"),
@@ -32,7 +33,7 @@ class FuzzSpec extends SparkTestBase {
   private case class Ord(ok: Long, ck: Long, status: String, pc: Long,
                          date: java.time.LocalDate, prio: String)
   private lazy val ords: Seq[Ord] =
-    spark.read.parquet(s"$sf/orders.parquet")
+    Tables.orders(spark, sf)
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
         round(col("o_totalprice") * 100).cast("long"),
         col("o_orderdate").cast("date"), col("o_orderpriority"))
@@ -40,12 +41,12 @@ class FuzzSpec extends SparkTestBase {
         r.getLong(3), r.getDate(4).toLocalDate, r.getString(5))).toSeq
 
   private lazy val custs: Map[Long, (Long, String)] =
-    spark.read.parquet(s"$sf/customer.parquet")
+    Tables.customer(spark, sf)
       .select(col("c_custkey"), col("c_nationkey").cast("long"), col("c_mktsegment"))
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getString(2)))).toMap
 
   private lazy val nations: Seq[(Long, String)] =
-    spark.read.parquet(s"$sf/nation.parquet")
+    Tables.nation(spark, sf)
       .select(col("n_nationkey").cast("long"), col("n_name"))
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
 

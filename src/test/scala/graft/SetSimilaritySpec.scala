@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.Text
+import graft.sources.Tables
 
 /** q74's prefix-filtered n-gram Jaccard join: prefix filtering is a
   * full-recall optimization (All-Pairs / PPJoin family), so its output must
@@ -25,7 +26,7 @@ class SetSimilaritySpec extends SparkTestBase {
 
     // Brute force: every pair sharing >= 1 gram (superset of any blocking
     // scheme on this corpus), exact Jaccard, same threshold.
-    val grams = spark.read.parquet(s"$sf/documents.parquet")
+    val grams = Tables.documents(spark, sf)
       .select(col("doc_id"), Text.tokens(col("text")).as("tk"))
       .select(col("doc_id"), explode(Text.wordNgrams(col("tk"), 5)).as("gram"))
       .distinct()

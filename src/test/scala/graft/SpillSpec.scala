@@ -107,11 +107,16 @@ class SpillSpec extends SparkTestBase {
     val q = "q74_ngram_jaccard"
     val clean = resultHash(SparkEntry.queries(q)(spark, sf))
     var forced: String = null
+    // Window spill threshold 64, not 16: every spill reader pins a 1 MiB
+    // buffer until its task ends (a task-completion listener holds it), and
+    // at 16 rows per file q74's doc-keyed windows (up to 95 rows per doc)
+    // write ~1,360 files and keep ~2,900 readers (3 GB) live at once, which
+    // runs the test heap out. At 64 the 181 docs above 64 rows still spill.
     val bytes = spilled {
       withConfs(
         "spark.sql.autoBroadcastJoinThreshold" -> "-1",
         "spark.sql.windowExec.buffer.in.memory.threshold" -> "16",
-        "spark.sql.windowExec.buffer.spill.threshold" -> "16",
+        "spark.sql.windowExec.buffer.spill.threshold" -> "64",
         "spark.sql.sortMergeJoinExec.buffer.in.memory.threshold" -> "4",
         "spark.sql.sortMergeJoinExec.buffer.spill.threshold" -> "4") {
         forced = resultHash(SparkEntry.queries(q)(spark, sf))

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.operators.SimHashBands
+import graft.sources.Tables
 import graft.streaming.DedupStream
 import graft.streaming.DedupStream.Doc
 
@@ -19,7 +20,7 @@ class StreamingDedupSpec extends SparkTestBase {
 
   // corpus = doc_id % 10 != 0 (what q86 indexes); stream = the batch slice
   private lazy val docsAll =
-    spark.read.parquet(s"$dir/documents.parquet").select("doc_id", "text")
+    Tables.documents(spark, dir).select("doc_id", "text")
   private lazy val bits = SimHashBands.bandBitsFor(docsAll.count())
   private lazy val index = DedupStream.fingerprints(
     docsAll.filter(col("doc_id") % 10L =!= 0L)).localCheckpoint()
