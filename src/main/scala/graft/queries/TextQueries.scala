@@ -1264,11 +1264,13 @@ object TextQueries {
             element_at(col("fp"), 1).as("lo"), element_at(col("fp"), 2).as("hi"))
         val idxPath =
           s"/tmp/graft_derived/${new java.io.File(d).getName}/simhash64_index"
+        val corpus = fpOf(docs(s, d).filter(col("doc_id") % 10L =!= 0L))
         Derived.ensure(idxPath, Derived.fingerprint(d, Seq("documents"))) {
-          fpOf(docs(s, d).filter(col("doc_id") % 10L =!= 0L))
-            .write.mode("overwrite").parquet(idxPath)
+          corpus.write.mode("overwrite").parquet(idxPath)
         }
-        val corpusBands = SimHashBands.bandsOf(s.read.parquet(idxPath), bits)
+        // read with the schema the writer produces: no inference job
+        val corpusBands = SimHashBands.bandsOf(
+          s.read.schema(corpus.schema).parquet(idxPath), bits)
         // The batch fingerprints feed three join sides (batch×index plus
         // both sides of batch²) — persist ONE generation (CacheScope) so
         // the batch is fingerprinted once, the incremental cost model.

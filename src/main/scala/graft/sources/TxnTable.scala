@@ -927,10 +927,12 @@ object TxnTable {
     // anti-join's 2.3x)
     def keep(raw: DataFrame): DataFrame = dvKeep.map(raw.filter).getOrElse(raw)
     if (snap.fids.isEmpty) {
-      // a manifest-carried evolved schema is passed to the parquet reader
-      // explicitly: files staged BEFORE an addColumn simply lack the new
-      // field and the reader null-backfills it — the Delta/Iceberg
-      // metadata-only evolution read, zero data rewritten
+      // the version's manifest schema is passed to the parquet reader
+      // explicitly, so building the read runs no schema-inference job;
+      // files staged BEFORE an addColumn simply lack the new field and
+      // the reader null-backfills it — the Delta/Iceberg metadata-only
+      // evolution read, zero data rewritten. Only a manifest written
+      // before commits recorded their schema (none carried) infers.
       val r = spark.read
       val df = keep(snap.schema.map(d => r.schema(structOf(d))).getOrElse(r)
         .parquet(paths(dirs): _*))
@@ -958,6 +960,13 @@ object TxnTable {
         }.reduce(_ unionByName _)
     }
   }
+
+  /** The columns every `dv-*` dir holds: a row's data/-relative file
+    * path and its parquet row index ([[stageDV]]). */
+  private val dvSchema = org.apache.spark.sql.types.StructType.fromDDL("rel string, pos long")
+
+  private def readDv(spark: SparkSession, paths: Seq[String]): DataFrame =
+    spark.read.schema(dvSchema).parquet(paths: _*)
 
   private[sources] def readDirsDV(spark: SparkSession, tableDir: String,
                                   snap: Snapshot, dirs: Seq[String]): DataFrame = {
@@ -993,14 +1002,14 @@ object TxnTable {
             // keyed by dir/name — the basename alone is NOT unique
             // across one bulk write job's partition dirs (see DvKeep)
             val positions: Map[String, Array[Long]] =
-              spark.read.parquet(paths(dvDirs): _*).collect()
+              readDv(spark, paths(dvDirs)).collect()
                 .map(r => (r.getString(0), r.getLong(1)))
                 .groupBy { case (rel, _) => graft.functions.DvKeep.dirAndName(rel) }
                 .map { case (key, xs) => key -> xs.map(_._2).sorted }
             readEras(spark, tableDir, snap, dvd, withMeta = false,
               dvKeep = Some(graft.functions.DvKeep.keepColumn(spark, positions)))
           } else {
-            val dv = spark.read.parquet(paths(dvDirs): _*)
+            val dv = readDv(spark, paths(dvDirs))
             val df = readEras(spark, tableDir, snap, dvd, withMeta = true)
             df.join(broadcast(dv),
                 df("_era_rel") === dv("rel") && df("_era_pos") === dv("pos"), "left_anti")
@@ -1017,14 +1026,19 @@ object TxnTable {
       // scoped — an eq delete only ever applies to dirs live at its
       // commit, so later appends are untouched), then anti-join each
       // group against the broadcast KB-sized key sets. NULL keys never
-      // match (SQL join) — NULL-key rows keep.
+      // match (SQL join) — NULL-key rows keep. Key sets read with the
+      // key columns' types from the version's schema (evolution of an
+      // outstanding eq key is refused, see [[refCheck]]).
       val eqFor = (d: String) =>
         snap.eqs.toSeq.filter(_._2._2.contains(d)).map(_._1).sorted
       val groups = dirs.groupBy(eqFor).toSeq.sortBy(_._2.head)
       groups.map { case (eqds, ds) =>
         eqds.foldLeft(readWithDv(ds)) { (df, e) =>
           val cols = snap.eqs(e)._1
-          val keys = spark.read.parquet(new File(dataDir(tableDir), e).getPath)
+          val r = spark.read
+          val keys = snap.schema.map(structOf)
+            .map(st => r.schema(org.apache.spark.sql.types.StructType(cols.map(st(_)))))
+            .getOrElse(r).parquet(new File(dataDir(tableDir), e).getPath)
           df.join(broadcast(keys.select(cols.map(keys.col): _*)), cols, "left_anti")
         }
       }.reduce(_ unionByName _)
@@ -1425,7 +1439,7 @@ object TxnTable {
     val staged = stagePartitionsBulk(spark, tableDir, dfp, bulkPartCol,
       Seq(partCol), s"null $partCol partition values unsupported")
     publishPartitionSwap(tableDir, staged.map(_._1), staged.map(_._2),
-      Seq(partCol), txnId, None)
+      Seq(partCol), txnId, None, recordableDdl(df.schema))
   }
 
   /** MULTI-COLUMN partitioned atomic overwrite (round 13): the
@@ -1473,7 +1487,7 @@ object TxnTable {
       partCols, s"null values in (${partCols.mkString(", ")}) partition " +
         "tuples unsupported")
     publishPartitionSwap(tableDir, staged.map(_._1), staged.map(_._2),
-      partCols, txnId, None)
+      partCols, txnId, None, recordableDdl(df.schema))
   }
 
   /** The live dirs that can hold rows matching every `spec` entry: a dir
@@ -1571,11 +1585,13 @@ object TxnTable {
     * caller-level retries. Each rebase re-reads the new base,
     * re-checks overlap, and re-plans `kept`; the staged dirs never
     * change. `ptrans` is the hidden-partition spec to publish (None =
-    * inherit the previous manifest's). */
+    * inherit the previous manifest's); `ddl` is the schema a first
+    * commit records (later ones carry their base's). */
   private def publishPartitionSwap(tableDir: String, staged: Seq[String],
                                    byValue: Seq[Seq[String]], partCols: Seq[String],
                                    txnId: Option[String],
                                    ptrans: Option[Option[(String, String)]],
+                                   ddl: Option[String],
                                    oldEraAliases: Set[String] = Set.empty): Long = {
     // a dir's full ordered partition vector (partsN for multi-col dirs,
     // parts for the historical single-col form)
@@ -1584,7 +1600,7 @@ object TxnTable {
     latestVersion(tableDir) match {
       case None =>
         if (!tryPublish(tableDir, 0L, "overwritePartitions", staged, txnId,
-            ptransOverride = ptrans))
+            schema = ddl, ptransOverride = ptrans))
           throw new CommitConflict(s"concurrent first commit at $tableDir")
         0L
       case Some(base) =>
@@ -1777,7 +1793,8 @@ object TxnTable {
     val staged = stagePartitionsBulk(spark, tableDir, withA, alias, Seq(alias),
       s"transform $transformSql evaluates to null for some rows")
     publishPartitionSwap(tableDir, staged.map(_._1), staged.map(_._2), Seq(alias),
-      txnId, Some(Some((alias, transformSql))), oldEraAliases = oldAliases)
+      txnId, Some(Some((alias, transformSql))), recordableDdl(df.schema),
+      oldEraAliases = oldAliases)
   }
 
   /** Query a hidden-partitioned table by SOURCE-column equality — the
@@ -2009,12 +2026,27 @@ object TxnTable {
       else None
     }.map(structOf)
 
+  /** The DDL a commit records as its manifest `schema`, which every
+    * read of that version hands the parquet reader: `st`'s catalog
+    * string, provided it parses back to itself and holds no '"' (the
+    * manifest's flat-field parse ends a value at the first '"').
+    * Otherwise nothing is recorded and reads of the version infer. */
+  private def recordableDdl(st: org.apache.spark.sql.types.StructType): Option[String] = {
+    val ddl = st.catalogString
+    Some(ddl).filter(d => !d.contains('"') &&
+      scala.util.Try(structOf(d).catalogString == d).getOrElse(false))
+  }
+
   /** Stage `df` as an immutable data dir (invisible until a manifest
     * references it), with a `.nrows` row-count sidecar (folded into the
     * manifest — the Delta operationMetrics/numRecords analogue, what
     * makes [[history]] metadata-only) and the optional min/max stats
-    * sidecar. One read-back aggregate covers both (parquet footers, no
-    * row scan). The stats column must be integral (see [[isIntegral]]). */
+    * sidecar. Without a stats column the row count is the staged files'
+    * parquet-footer record counts, summed on the driver: the write is
+    * the only job. A stats column (or a constraint) adds read-back
+    * aggregates over the staged dir, read with `df`'s own schema, so no
+    * job infers it. The stats column must be integral (see
+    * [[isIntegral]]). */
   private def stage(df: DataFrame, tableDir: String,
                     statsCol: Option[String],
                     fidsForSidecar: Option[Map[String, Int]] = None): String = {
@@ -2023,7 +2055,7 @@ object TxnTable {
     val dir = new File(dataDir(tableDir), staged)
     df.write.mode("overwrite").parquet(dir.getPath)
     import org.apache.spark.sql.functions.{col, count, lit, max, min}
-    val back = df.sparkSession.read.parquet(dir.getPath)
+    val back = df.sparkSession.read.schema(df.schema).parquet(dir.getPath)
     val n = statsCol match {
       case Some(c) if isStringCol(df, c) =>
         // STRING bounds (round 13): min/max under Spark's own ordering
@@ -2094,7 +2126,7 @@ object TxnTable {
             s"$c:${mins.mkString(",")}".getBytes("UTF-8")): Unit
         }
         r.getLong(0)
-      case None => back.count()
+      case None => footerRowCount(dir)
     }
     // write-time CHECK + generated-column enforcement: EVERY row
     // entering the table passes through stage, so this one gate covers
@@ -2144,6 +2176,16 @@ object TxnTable {
           df.schema.fieldNames.map(fidsNow).mkString(" ")).getBytes("UTF-8")): Unit
     }
     staged
+  }
+
+  /** [[stage]] for a result that may be empty, staged first: an empty
+    * result (its `.nrows` is 0) deletes its staged dir and stages
+    * nothing, so no separate emptiness job runs before the write. */
+  private def stageNonEmpty(df: DataFrame, tableDir: String,
+                            statsCol: Option[String]): Option[String] = {
+    val staged = stage(df, tableDir, statsCol)
+    if (nrowsOf(tableDir, staged).exists(_ > 0L)) Some(staged)
+    else { deleteRec(new File(dataDir(tableDir), staged)); None }
   }
 
   /** The stats column's KMV NDV sketch from a data dir's `.kmv`
@@ -2504,11 +2546,13 @@ object TxnTable {
         if (action == "overwrite") None else base.map(snapshot(tableDir, _))
       val prevLive = prevSnap.map(_.live).getOrElse(Nil)
       val next = base.map(_ + 1L).getOrElse(0L)
+      // the first commit and every overwrite record their schema; an
+      // append carries its base's forward
       if (tryPublish(tableDir, next, action, prevLive :+ staged, txnId,
           dvs = prevSnap.map(_.dvs).getOrElse(Map.empty),
           schema =
             if (owFids.isDefined) Some(dfG.schema.catalogString)
-            else prevSnap.flatMap(_.schema),
+            else prevSnap.map(_.schema).getOrElse(recordableDdl(dfG.schema)),
           fidsOverride = owFids)) {
         maybeCheckpoint(tableDir, next); return next
       }
@@ -3167,9 +3211,7 @@ object TxnTable {
     val keys = updates.select(keyCols.map(updates.col): _*).distinct()
     val updated = touched.flatMap(d =>
       stageDVMatch(spark, tableDir, snap, d, keys, keyCols).map(d -> _)).toMap
-    val staged =
-      if (updates.isEmpty) None
-      else Some(stage(updates, tableDir, Some(key).filter(_ => hasStats)))
+    val staged = stageNonEmpty(updates, tableDir, Some(key).filter(_ => hasStats))
     publishRebasing(tableDir, snap, "merge", Set.empty, staged.toSeq,
       touched.toSet,
       bounds.map { case (lo, hi) => AddsKeyDisjoint(key, lo, hi) }
@@ -3945,17 +3987,16 @@ object TxnTable {
     * drops entries for rewritten dirs automatically). */
   /** Stage-and-publish tail shared by the copy-on-write DELETE/UPDATE
     * forms: `removed` dirs (the op's read-and-rewritten set) drop from
-    * live, `remaining` lands as one staged dir, and the publish rebases
-    * past provably-disjoint winners ([[publishRebasing]]). Kept dirs
-    * and their dvs carry through whatever head the publish lands on. */
+    * live, `remaining` lands as one staged dir (none when it is empty),
+    * and the publish rebases past provably-disjoint winners
+    * ([[publishRebasing]]). Kept dirs and their dvs carry through
+    * whatever head the publish lands on. */
   private def commitRewrite(tableDir: String, snap: Snapshot, action: String,
                             removed: Seq[String], remaining: DataFrame,
                             statsCol: Option[String],
                             txnId: Option[String],
                             addCheck: WinnerAddCheck): Long = {
-    val added =
-      if (remaining.isEmpty) Nil
-      else Seq(stage(remaining, tableDir, statsCol))
+    val added = stageNonEmpty(remaining, tableDir, statsCol).toSeq
     publishRebasing(tableDir, snap, action, removed.toSet, added,
       removed.toSet, addCheck, txnId)
   }
@@ -4006,14 +4047,14 @@ object TxnTable {
   private def writeDV(spark: SparkSession, tableDir: String, snap: Snapshot,
                       dir: String, matched: DataFrame): Option[String] = {
     val all = snap.dvs.get(dir) match {
-      case Some(old) => matched.unionByName(spark.read.parquet(
-        new File(dataDir(tableDir), old).getPath)).distinct()
+      case Some(old) => matched.unionByName(
+        readDv(spark, Seq(new File(dataDir(tableDir), old).getPath))).distinct()
       case None => matched
     }
     val name = s"dv-${UUID.randomUUID()}"
     val dest = new File(dataDir(tableDir), name)
     all.coalesce(1).write.parquet(dest.getPath)
-    val n = spark.read.parquet(dest.getPath).count()
+    val n = footerRowCount(dest)
     val oldN = snap.dvs.get(dir).flatMap(nrowsOf(tableDir, _)).getOrElse(0L)
     if (n == 0L) { deleteRec(dest); None }
     else if (n == oldN) { deleteRec(dest); snap.dvs.get(dir) } // nothing new
@@ -4172,7 +4213,7 @@ object TxnTable {
     val dest = new File(dataDir(tableDir), eqName)
     keys.select(keyCols.map(keys.col): _*).distinct().coalesce(1)
       .write.parquet(dest.getPath)
-    val n = spark.read.parquet(dest.getPath).count()
+    val n = footerRowCount(dest)
     Files.write(new File(dest, ".nrows").toPath, n.toString.getBytes("UTF-8"))
     publishRebasing(tableDir, snap, "delete", Set.empty, Nil, applies.toSet,
       addCheck, txnId, eqAdd = Some(eqName -> ((keyCols, applies))))
@@ -4219,7 +4260,7 @@ object TxnTable {
       val matched = dfT.filter(
         col(column).isNotNull && col(column) >= lo && col(column) <= hi)
       val rewritten = applySet(matched, lit(true), set)
-      if (rewritten.isEmpty) None else Some(stage(rewritten, tableDir, Some(column)))
+      stageNonEmpty(rewritten, tableDir, Some(column))
     }
     // dv the raw positions (already-dv'd rows re-match harmlessly — the
     // cumulative union dedups; the APPENDED rows above came through dvs)
@@ -4253,7 +4294,7 @@ object TxnTable {
       val matched = readDirsDV(spark, tableDir, snap, snap.live)
         .filter(coalesce(predicate, lit(false)))
       val rewritten = applySet(matched, lit(true), set)
-      if (rewritten.isEmpty) None else Some(stage(rewritten, tableDir, None))
+      stageNonEmpty(rewritten, tableDir, None)
     }
     val updated = snap.live.flatMap(d =>
       stageDV(spark, tableDir, snap, d, _ => predicate).map(d -> _)).toMap
@@ -4469,15 +4510,15 @@ object TxnTable {
     if (dirty.isEmpty) return base // no debt — nothing to commit
     val staged = dirty.flatMap { d =>
       val df = readDirsDV(spark, tableDir, snap, Seq(d))
-      if (df.isEmpty) None // fully-doomed dir: drops from the live set
-      else {
-        val statCols = statsAllOf(tableDir, d).map(_._1)
-          .filter(c => df.columns.contains(c) && longStatsable(df, c))
-        val s = stage(df, tableDir, statCols.headOption)
+      val statCols = statsAllOf(tableDir, d).map(_._1)
+        .filter(c => df.columns.contains(c) && longStatsable(df, c))
+      // a fully-doomed dir stages nothing and drops from the live set
+      stageNonEmpty(df, tableDir, statCols.headOption).map { s =>
         // re-derive the REMAINING stats columns (Z-ordered dirs carry
         // two) so clustering's pruning power survives the purge
         if (statCols.size > 1) {
-          val back = spark.read.parquet(new File(dataDir(tableDir), s).getPath)
+          val back = spark.read.schema(df.schema)
+            .parquet(new File(dataDir(tableDir), s).getPath)
           val aggs = statCols.tail.flatMap(c =>
             Seq(min(longProj(back, c)), max(longProj(back, c))))
           val r = back.agg(aggs.head, aggs.tail: _*).head()
@@ -4497,7 +4538,7 @@ object TxnTable {
           Files.write(new File(new File(dataDir(tableDir), s), ".part").toPath,
             s"$c=$v".getBytes("UTF-8")): Unit
         }
-        Some(s)
+        s
       }
     }
     // the dirty dirs' dvs die with them automatically: tryPublish keeps
@@ -4598,7 +4639,7 @@ object TxnTable {
             Files.move(b.toPath, d.toPath, StandardCopyOption.ATOMIC_MOVE)
             (nm, d)
           }
-        val packed = spark.read.parquet(dest.getPath)
+        val packed = spark.read.schema(df.schema).parquet(dest.getPath)
         import org.apache.spark.sql.functions.{count, lit}
         val aggs = count(lit(1)) +: clusterCols.flatMap(c =>
           Seq(min(col(c).cast("long")), max(col(c).cast("long"))))
@@ -4708,8 +4749,9 @@ object TxnTable {
     * and re-folds their stats/parts/nrows sidecars, so pruning works on
     * the restored snapshot unchanged. [[vacuum]] then protects those
     * dirs: they are referenced by a retained manifest again. Restoring
-    * across an explicit schema evolution also reverts `_schema` (read
-    * from the restored dirs' parquet footers — the data is the truth).
+    * across an explicit schema evolution also reverts `_schema` (to the
+    * target's manifest schema; from the restored dirs' parquet footers
+    * when the target manifest predates recorded schemas).
     * The target must still be retained ([[RetentionError]] otherwise);
     * publishes only at base+1 ([[CommitConflict]] if taken). */
   def restore(spark: SparkSession, tableDir: String, toVersion: Long,
@@ -4730,12 +4772,15 @@ object TxnTable {
       s"cannot restore $tableDir to v$toVersion: it predates field-id " +
         "minting (rename/drop/widen); restore to a post-minting version " +
         "or compact first")
-    if (target.live.nonEmpty) {
-      val ddl = spark.read.parquet(
+    // the target's manifest schema; a target that carries none infers
+    // it from its dirs' parquet footers
+    target.schema.orElse(
+      if (target.live.isEmpty) None
+      else Some(spark.read.parquet(
         target.live.map(d => new File(dataDir(tableDir), d).getPath): _*)
-        .schema.catalogString
-      Files.write(new File(tableDir, "_schema").toPath, ddl.getBytes("UTF-8")): Unit
-    }
+        .schema.catalogString)
+    ).foreach(ddl =>
+      Files.write(new File(tableDir, "_schema").toPath, ddl.getBytes("UTF-8")))
     if (!tryPublish(tableDir, base + 1L, "restore", target.live, txnId,
         dvs = target.dvs, schema = target.schema,
         eqsOverride = Some(target.eqs),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
 import org.apache.spark.sql.functions._
 
 import graft.functions.TopKLongs
+import graft.sources.Tables
 
 /** The KMV approximate-distinct optimizer rule (graft.plans
   * .ApproxDistinctRewrite): answer-changing, so strictly opt-in; when it
@@ -28,7 +29,7 @@ class ApproxDistinctSpec extends SparkTestBase {
     }))
 
   private def q(s: org.apache.spark.sql.SparkSession): DataFrame =
-    s.read.parquet("/root/testdata/sf0.001/events.parquet")
+    Tables.events(s, sf0001)
       .groupBy(col("event_type"))
       .agg(countDistinct(col("user_id")).as("du"))
 
@@ -55,11 +56,11 @@ class ApproxDistinctSpec extends SparkTestBase {
 
   test("the rewritten estimate equals the q58 KMV construction bit-for-bit") {
     val viaRule = withApprox(on = true) {
-      xs.read.parquet("/root/testdata/sf0.001/events.parquet")
+      Tables.events(xs, sf0001)
         .agg(countDistinct(col("user_id")).as("du")).head().getLong(0)
     }
     // q58's Column-API construction, evaluated independently
-    val h = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    val h = Tables.events(spark, sf0001)
       .select(conv(substring(md5(col("user_id").cast("string")), 1, 12), 16, 10)
         .cast("long").as("hv")).distinct()
     val manual = h.agg(TopKLongs.topK(-col("hv"), col("hv"), 64).as("tk"))
@@ -74,11 +75,11 @@ class ApproxDistinctSpec extends SparkTestBase {
 
   test("mixed aggregates: non-distinct siblings pass through unchanged") {
     withApprox(on = true) {
-      val df = xs.read.parquet("/root/testdata/sf0.001/events.parquet")
+      val df = Tables.events(xs, sf0001)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), countDistinct(col("user_id")).as("du"))
       assert(kmvFired(df))
-      val exactN = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+      val exactN = Tables.events(spark, sf0001)
         .groupBy(col("event_type")).agg(count(lit(1)).as("n"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       df.collect().foreach { r =>

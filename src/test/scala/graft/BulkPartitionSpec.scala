@@ -3,7 +3,6 @@ package graft
 import java.io.File
 import java.nio.file.Files
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.col
 
 import graft.sources.TxnTable
@@ -24,19 +23,6 @@ class BulkPartitionSpec extends SparkTestBase {
   import spark.implicits._
 
   private def tmp(): String = Files.createTempDirectory("graft-bulk").toString
-
-  /** Spark jobs submitted while `body` runs (listener-based; the bus
-    * drains asynchronously, so give it a moment before counting). */
-  private def jobsDuring(body: => Unit): Int = {
-    val count = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = { count.incrementAndGet(); () }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try { body; Thread.sleep(1500) }
-    finally spark.sparkContext.removeSparkListener(l)
-    count.get()
-  }
 
   test("bulk overwritePartitions: 64 partitions stage in O(1) Spark jobs, " +
       "not one job per value") {

@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.plans.logical.Filter
 import org.apache.spark.sql.functions._
 
 import graft.functions.CountMinLongs
+import graft.sources.Tables
 
 /** The CMS heavy-hitter prune optimizer rule (graft.plans
   * .CmsHeavyHitterPrune, injected by GraftExtensions.injectOptimizerRule):
@@ -40,7 +41,7 @@ class CmsPruneSpec extends SparkTestBase {
     }
 
   private def heavyUsers(s: SparkSession): DataFrame =
-    s.read.parquet("/root/testdata/sf0.001/events.parquet")
+    Tables.events(s, sf0001)
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") >= 8L)
@@ -82,7 +83,7 @@ class CmsPruneSpec extends SparkTestBase {
 
   test("ineligible shapes are left untouched") {
     withPrune(on = true) {
-      val ev = xs.read.parquet("/root/testdata/sf0.001/events.parquet")
+      val ev = Tables.events(xs, sf0001)
       // count(distinct) is not a row count — no prune
       val distinctAgg = ev.groupBy(col("user_id"))
         .agg(countDistinct(col("event_id")).as("cnt")).filter(col("cnt") >= 8L)

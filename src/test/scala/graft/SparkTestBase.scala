@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,6 +19,40 @@ object TestSpark {
 
 abstract class SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.session
+
+  /** The sf0.001 harness tables (TESTDATA.md), in `testdata` under the
+    * home directory, where perfbench looks for them by default. */
+  protected val sf0001: String = s"${sys.props("user.home")}/testdata/sf0.001"
+
+  /** Spark jobs started from this thread while `body` runs. Listener events
+    * are asynchronous but ordered, so a sentinel job started after `body`
+    * marks the point by which every job of `body` has been seen. */
+  protected def jobsDuring(body: => Unit): Int = {
+    val group = s"jobs-during-${System.nanoTime}"
+    val jobs = new AtomicInteger(0)
+    val sentinelSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet(); ()
+          case Some(g) if g == s"$group-sentinel" => sentinelSeen.countDown()
+          case _ => ()
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "jobsDuring probe")
+      body
+      sc.setJobGroup(s"$group-sentinel", "jobsDuring sentinel")
+      spark.range(1).count()
+      assert(sentinelSeen.await(60, TimeUnit.SECONDS), "sentinel job never seen")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    jobs.get()
+  }
 
   /** Run independent test units concurrently on a bounded pool. The heavy
     * fuzz suites are driver-bound sequences of tiny Spark jobs, so a few

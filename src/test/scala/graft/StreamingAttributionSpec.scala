@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.streaming.EventStream
 import graft.streaming.EventStream.Event
+import graft.sources.Tables
 
 /** Stream-stream watermarked interval join (EventStream.lastTouchPairs):
   * proven EQUAL to the batch q143 last-touch attribution on the same
@@ -37,7 +38,7 @@ class StreamingAttributionSpec extends SparkTestBase {
             Option(r.getAs[java.lang.Long]("gap_us")).map(_.longValue)))
       }.toMap
 
-    val events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    val events = Tables.events(spark, sf0001)
       .filter(col("event_type").isin("click", "purchase"))
       .selectExpr("event_id", "cast(ts as timestamp) AS ts",
         "user_id", "event_type", "value")

@@ -4,6 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.streaming.EventStream
 import graft.streaming.EventStream.Event
+import graft.sources.Tables
 
 /** Structured Streaming operators driven by MemoryStream: watermarked
   * tumbling aggregation (q42's streaming twin) and stateful gap
@@ -216,7 +217,7 @@ class StreamingSpec extends SparkTestBase {
     val stateDir = java.nio.file.Files.createTempDirectory("graft_mview").toString
 
     // q108's input slice, streamed in three deterministic shards
-    val orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
+    val orders = Tables.orders(spark, sf0001)
       .select($"o_custkey", $"o_totalprice")
     val shards = (0 to 2).map(k =>
       orders.filter(pmod($"o_custkey", lit(3)) === k)

@@ -1,10 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.sources.Tables
@@ -41,36 +38,6 @@ class TablesSpec extends SparkTestBase {
       val inferred = spark.read.parquet(s"$dir/$name.parquet").schema
       assert(read(spark, dir).schema == inferred, s"$name at $dir")
     }
-  }
-
-  /** Spark jobs started from this thread while `body` runs. Listener events
-    * are asynchronous but ordered, so a sentinel job started after `body`
-    * marks the point by which every job of `body` has been seen. */
-  private def jobsDuring(body: => Unit): Int = {
-    val group = s"tables-spec-${System.nanoTime}"
-    val jobs = new AtomicInteger(0)
-    val sentinelSeen = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet(); ()
-          case Some(g) if g == s"$group-sentinel" => sentinelSeen.countDown()
-          case _ => ()
-        }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "TablesSpec probe")
-      body
-      sc.setJobGroup(s"$group-sentinel", "TablesSpec sentinel")
-      spark.range(1).count()
-      assert(sentinelSeen.await(60, TimeUnit.SECONDS), "sentinel job never seen")
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-    jobs.get()
   }
 
   test("building a harness read launches no Spark job") {

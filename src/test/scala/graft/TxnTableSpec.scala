@@ -2075,4 +2075,120 @@ class TxnTableSpec extends SparkTestBase {
     // the retained head still reads fine
     assert(TxnTable.snapshot(dir, 1L).version == 1L)
   }
+
+  // ---- a commit is its write job: recorded schemas, footer row counts ----
+
+  private def dataDirs(dir: String): Set[String] =
+    Option(new File(dir, "data").listFiles()).getOrElse(Array.empty[File])
+      .map(_.getName).toSet
+
+  /** Rows the manifest accounts for: live dirs' counts minus their dvs'. */
+  private def manifestRows(dir: String): Long = {
+    val sn = TxnTable.snapshot(dir, TxnTable.latestVersion(dir).get)
+    sn.live.map(sn.nrows).sum - sn.live.flatMap(sn.dvs.get).map(sn.nrows).sum
+  }
+
+  test("a read builds with no job; deleteWhere and compact are one write job each") {
+    import org.apache.spark.sql.functions.col
+    val dir = tmpTable()
+    TxnTable.append(Seq((1, "a"), (2, "b"), (3, "c")).toDF("id", "v").coalesce(1), dir)
+    assert(TxnTable.snapshot(dir, 0L).schema.contains("struct<id:int,v:string>"),
+      "the first commit did not record its schema")
+    assert(jobsDuring(TxnTable.read(spark, dir): Unit) == 0)
+    assert(jobsDuring(TxnTable.deleteWhere(spark, dir, col("id") === 2): Unit) == 1)
+    assert(jobsDuring(TxnTable.compact(spark, dir, targetFiles = 1): Unit) == 1)
+    assert(rows(dir) == Seq((1, "a"), (3, "c")))
+  }
+
+  test("time travel reads every version with its own columns, across " +
+      "an overwrite that adds one and a restore that drops it again") {
+    val dir = tmpTable()
+    TxnTable.append(Seq((1, "a")).toDF("id", "v"), dir)
+    TxnTable.overwrite(Seq((2, "b", 20L)).toDF("id", "v", "w"), dir)
+    def at(v: Long) = TxnTable.read(spark, dir, Some(v))
+    assert(at(0L).columns.toSeq == Seq("id", "v"))
+    assert(rows(dir, Some(0L)) == Seq((1, "a")))
+    assert(at(1L).columns.toSeq == Seq("id", "v", "w"))
+    assert(at(1L).collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
+      .toSeq == Seq((2, "b", 20L)))
+    // restore rewrites the table-level `_schema`; v1 keeps its own
+    assert(TxnTable.restore(spark, dir, 0L) == 2L)
+    assert(at(1L).columns.toSeq == Seq("id", "v", "w"))
+    assert(at(1L).collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
+      .toSeq == Seq((2, "b", 20L)))
+    assert(at(2L).columns.toSeq == Seq("id", "v"))
+    assert(rows(dir) == Seq((1, "a")))
+  }
+
+  test("manifest row counts match the data after every kind of commit") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val dir = tmpTable()
+    def check(op: String): Unit = {
+      val sn = TxnTable.snapshot(dir, TxnTable.latestVersion(dir).get)
+      sn.nrows.foreach { case (d, n) =>
+        assert(spark.read.parquet(new File(new File(dir, "data"), d).getPath).count() == n,
+          s"$op: nrows of $d")
+      }
+      assert(manifestRows(dir) == TxnTable.read(spark, dir).count(), op)
+    }
+    TxnTable.append((1 to 20).map(i => (i, s"v$i")).toDF("id", "v").coalesce(2), dir,
+      statsCol = Some("id"))
+    check("append")
+    TxnTable.mergeInto(spark, dir, Seq((5, "five"), (30, "thirty")).toDF("id", "v"),
+      Seq("id"), Seq(TxnTable.MatchedUpdate(lit(true), Map("v" -> col("_src_v")))))
+    check("mergeInto")
+    TxnTable.deleteWhere(spark, dir, col("id") === 7)
+    check("deleteWhere")
+    TxnTable.compact(spark, dir, targetFiles = 1)
+    check("compact")
+    TxnTable.deleteRangeDV(spark, dir, "id", 10L, 12L)
+    check("deleteRangeDV")
+    TxnTable.mergeDV(spark, dir, Seq((1, "one")).toDF("id", "v"), Seq("id"))
+    check("mergeDV")
+    assert(TxnTable.read(spark, dir).count() == 17L)
+    // an eq delete's key count is its dir's own sidecar (the manifest
+    // records which dirs it applies to, not a count)
+    val before = dataDirs(dir)
+    TxnTable.deleteKeysEq(spark, dir, Seq(2, 3, 99).toDF("id"))
+    val eqDir = (dataDirs(dir) -- before).filter(_.startsWith("eq-")).toSeq
+    assert(eqDir.size == 1)
+    assert(TxnTable.nrowsOf(dir, eqDir.head).contains(3L))
+    assert(manifestRows(dir) - 2L == TxnTable.read(spark, dir).count())
+  }
+
+  test("a deleteWhere matching every row stages nothing and leaves no dir behind") {
+    import org.apache.spark.sql.functions.lit
+    val dir = tmpTable()
+    TxnTable.append(Seq((1, "a"), (2, "b")).toDF("id", "v"), dir)
+    val before = dataDirs(dir)
+    val v = TxnTable.deleteWhere(spark, dir, lit(true))
+    assert(TxnTable.snapshot(dir, v).live.isEmpty)
+    assert(dataDirs(dir) == before, "the empty rewrite left a staged dir")
+    assert(TxnTable.read(spark, dir).count() == 0L)
+  }
+
+  test("a manifest without a recorded schema still reads, by inference") {
+    val dir = tmpTable()
+    TxnTable.append(Seq((1, "a"), (2, "b")).toDF("id", "v"), dir)
+    // rewrite v0 as a manifest from before schemas were recorded: the
+    // same body without its `schema` field, under a fresh integrity header
+    val f = new File(new File(dir, "_log"), f"v${0L}%020d.json")
+    val text = new String(Files.readAllBytes(f.toPath), "UTF-8")
+    val body = text.substring(text.indexOf('\n') + 1)
+      .replaceFirst(",\"schema\":\"[^\"]*\"", "")
+    assert(!body.contains("\"schema\""))
+    val bytes = body.getBytes("UTF-8")
+    val crc = new java.util.zip.CRC32()
+    crc.update(bytes)
+    Files.write(f.toPath, f"@graft-manifest crc32:${crc.getValue}%08x len:${bytes.length}%d\n"
+      .getBytes("UTF-8") ++ bytes)
+    TxnTable.clearSnapshotCache()
+    assert(TxnTable.snapshot(dir, 0L).schema.isEmpty)
+    assert(jobsDuring(TxnTable.read(spark, dir): Unit) > 0, "no inference job ran")
+    assert(rows(dir) == Seq((1, "a"), (2, "b")))
+    // a later append carries the absence forward and still reads
+    TxnTable.append(Seq((3, "c")).toDF("id", "v"), dir)
+    assert(TxnTable.snapshot(dir, 1L).schema.isEmpty)
+    assert(rows(dir) == Seq((1, "a"), (2, "b"), (3, "c")))
+  }
 }

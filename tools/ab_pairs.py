@@ -1,0 +1,142 @@
+#!/usr/bin/env python3
+"""Run the benchmark as alternating parent/change pairs and compare them.
+
+    python3 tools/ab_pairs.py --parent <checkout> --change <checkout> \\
+        --workload star_etl --seeds 1001-1010 [--seconds 15] [--trace 0] [--json out.json]
+
+Each pair runs `python3 perfbench/run.py` once in each checkout on the same
+seed. The side that goes first alternates from pair to pair, so a drift of
+the host over time weighs on both sides alike. For every metric that
+BENCHMARK.json declares for the chosen trace mode, the report gives:
+
+- the median of each side and the parent's quartile spread (Q3 - Q1);
+- the pairs the change won, lost and tied (better = lower or higher, as the
+  metric declares);
+- the change/parent ratio of the medians and, for end-to-end metrics, how far
+  the change is worse than the parent against the metric's bound.
+
+The runs' correctness (failed operations over attempted ones) is reported too.
+The tool reads only the change checkout's BENCHMARK.json, and runs each
+checkout's own perfbench/run.py.
+"""
+import argparse
+import json
+import os
+import statistics
+import subprocess
+import sys
+
+
+def seed_range(text):
+    lo, _, hi = text.partition("-")
+    return list(range(int(lo), int(hi or lo) + 1))
+
+
+def run_once(checkout, workload, seed, seconds, trace):
+    """One benchmark run; its result line, or None when the run failed."""
+    cmd = ["python3", "perfbench/run.py", "--workload", workload, "--seed", str(seed),
+           "--seconds", str(seconds), "--trace", str(trace)]
+    p = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True)
+    lines = p.stdout.strip().splitlines()
+    if p.returncode != 0 or not lines:
+        sys.stderr.write(p.stderr[-2000:])
+        return None
+    return json.loads(lines[-1])
+
+
+def spread(xs):
+    """Q3 - Q1 (the statistics module's default 'exclusive' quartiles)."""
+    if len(xs) < 2:
+        return 0.0
+    q1, _, q3 = statistics.quantiles(xs, n=4)
+    return q3 - q1
+
+
+def report(spec_metrics, pairs):
+    rows = []
+    for m in spec_metrics:
+        name, lower = m["name"], m["better"] == "lower"
+        ok = [(p, c) for p, c in pairs if p is not None and c is not None]
+        par = [p["metrics"][name]["value"] for p, _ in ok]
+        chg = [c["metrics"][name]["value"] for _, c in ok]
+        if not ok:
+            continue
+        wins = sum(1 for a, b in zip(par, chg) if (b < a if lower else b > a))
+        ties = sum(1 for a, b in zip(par, chg) if a == b)
+        mp, mc = statistics.median(par), statistics.median(chg)
+        ratio = mc / mp if mp else float("nan")
+        row = {"metric": name, "unit": m["unit"], "better": m["better"],
+               "parent_median": mp, "change_median": mc, "parent_spread": spread(par),
+               "median_gap": abs(mc - mp), "wins": wins, "ties": ties,
+               "losses": len(ok) - wins - ties, "pairs": len(ok), "ratio": ratio}
+        if "bound" in m and mp:
+            worse = (ratio - 1.0) if lower else (1.0 - ratio)
+            row.update(bound=m["bound"], worse_by=worse, within_bound=worse <= m["bound"])
+        rows.append(row)
+    return rows
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--parent", required=True, help="checkout of the parent commit")
+    ap.add_argument("--change", required=True, help="checkout of the change")
+    ap.add_argument("--workload", required=True)
+    ap.add_argument("--seeds", required=True, help="inclusive range, e.g. 1001-1010")
+    ap.add_argument("--seconds", type=float, default=15)
+    ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
+    ap.add_argument("--json", help="write every run's result line and the report here")
+    a = ap.parse_args()
+
+    with open(os.path.join(a.change, "BENCHMARK.json")) as f:
+        spec = json.load(f)
+    spec_metrics = spec["per_layer" if a.trace else "end_to_end"]
+
+    pairs, runs = [], []
+    for i, seed in enumerate(seed_range(a.seeds)):
+        order = [("parent", a.parent), ("change", a.change)]
+        if i % 2:
+            order.reverse()
+        got = {}
+        for side, checkout in order:
+            got[side] = run_once(checkout, a.workload, seed, a.seconds, a.trace)
+            runs.append({"seed": seed, "side": side, "result": got[side]})
+            r = got[side]
+            summary = "FAILED RUN" if r is None else " ".join(
+                f"{m['name']}={r['metrics'][m['name']]['value']:.4g}" for m in spec_metrics[:5])
+            print(f"[ab] seed {seed} {side}: {summary}", file=sys.stderr, flush=True)
+        pairs.append((got["parent"], got["change"]))
+
+    def fail_share(side):
+        rs = [r["result"] for r in runs if r["side"] == side]
+        done = [r for r in rs if r is not None]
+        attempted = sum(r["attempted"] for r in done)
+        failed = sum(r["failed"] for r in done)
+        return {"runs": len(rs), "runs_failed": len(rs) - len(done), "attempted": attempted,
+                "failed": failed, "failed_share": failed / attempted if attempted else None}
+
+    rows = report(spec_metrics, pairs)
+    correctness = {"parent": fail_share("parent"), "change": fail_share("change")}
+    print(f"{a.workload}, seeds {a.seeds}, --seconds {a.seconds:g} --trace {a.trace}")
+    for side, c in correctness.items():
+        print(f"  {side}: {c['runs']} runs ({c['runs_failed']} failed to run), "
+              f"{c['failed']}/{c['attempted']} operations failed")
+    print(f"{'metric':34} {'parent':>12} {'change':>12} {'ratio':>7} {'P spread':>10} "
+          f"{'gap':>10} {'W/T/L':>8}  bound")
+    for r in rows:
+        wtl = f"{r['wins']}/{r['ties']}/{r['losses']}"
+        bound = ""
+        if "bound" in r:
+            bound = (f"worse by {r['worse_by']:+.3f} vs {r['bound']} "
+                     f"({'within' if r['within_bound'] else 'OUTSIDE'})")
+        print(f"{r['metric']:34} {r['parent_median']:12.4g} {r['change_median']:12.4g} "
+              f"{r['ratio']:7.3f} {r['parent_spread']:10.4g} {r['median_gap']:10.4g} "
+              f"{wtl:>8}  {bound}")
+    if a.json:
+        with open(a.json, "w") as f:
+            json.dump({"workload": a.workload, "seeds": a.seeds, "seconds": a.seconds,
+                       "trace": a.trace, "runs": runs, "correctness": correctness,
+                       "report": rows}, f, indent=1)
+
+
+if __name__ == "__main__":
+    main()
