@@ -77,20 +77,21 @@ object Components {
               edges: DataFrame, srcCol: String, dstCol: String): (DataFrame, Int) =
     altStarFrom(nodes, idCol, canonicalEdges(edges, srcCol, dstCol))
 
-  /** Canonical parent-edge form (u, p) with p < u, distinct, MATERIALIZED
+  /** Canonical parent-edge form (u, p) with p < u, distinct, checkpointed
     * (localCheckpoint): both CC paths iterate over or count this frame
-    * several times, and an un-materialized band-join subtree would
-    * otherwise re-execute per consumer.
+    * several times, and an un-checkpointed band-join subtree would
+    * otherwise re-execute per consumer. The checkpoint is lazy: the first
+    * job over the frame stores it, so no job runs only to materialize it.
     */
   private def canonicalEdges(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
     edges
       .select(greatest(col(srcCol).cast("long"), col(dstCol).cast("long")).as("u"),
               least(col(srcCol).cast("long"), col(dstCol).cast("long")).as("p"))
-      .where(col("u") =!= col("p")).distinct().localCheckpoint()
+      .where(col("u") =!= col("p")).distinct().localCheckpoint(eager = false)
 
-  /** Size-gated dispatch — the adaptive entry point: one scalar count on
-    * the materialized edge list (the same one-action-per-round discipline
-    * as altStar's certificate) picks the physical strategy:
+  /** Size-gated dispatch — the adaptive entry point: one count of the
+    * edge list, the single job that also stores its checkpoint (a plain
+    * RDD count, with no aggregate exchange), picks the physical strategy:
     *  - edge list ≤ `localMaxEdges` → [[localUnionFind]]: ONE single-task
     *    job instead of ~5 rounds × 2 jobs. A near-dup pair graph is
     *    sparse by construction (banding bounds candidates), so at sf
@@ -107,7 +108,7 @@ object Components {
            edges: DataFrame, srcCol: String, dstCol: String,
            localMaxEdges: Long = 4000000L): (DataFrame, Int) = {
     val e = canonicalEdges(edges, srcCol, dstCol)
-    if (e.count() <= localMaxEdges) (localUnionFind(nodes, idCol, e), 1)
+    if (e.queryExecution.toRdd.count() <= localMaxEdges) (localUnionFind(nodes, idCol, e), 1)
     else altStarFrom(nodes, idCol, e)
   }
 

@@ -1,11 +1,14 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.sources.Tables
 import graft.operators.{AsOf, Joins, RangeJoin, Skew, Windows}
 import graft.functions.Exact.cents
-import graft.functions.TopKLongs
+import graft.functions.{NativeText, TopKLongs}
 
 /** Remaining pipeline operators: multimodal binary-column plumbing, the
   * scale-safe surrogate-key path, event-time aggregation over the `events`
@@ -1784,7 +1787,6 @@ object MiscQueries {
            |FROM z GROUP BY 1 ORDER BY cell""".stripMargin
       },
       (s, d) => {
-        import graft.functions.NativeText
         Tables.orders(s, d)
           .select(pmod(col("o_custkey"), lit(1024L)).as("x"),
             pmod(datediff(col("o_orderdate").cast("date"),
@@ -2761,11 +2763,10 @@ object MiscQueries {
     // (unigrams saturate: this corpus's shared token vocabulary lets one
     // source cover everything and the greedy degenerates to one round —
     // bigrams are word-order-specific, so coverage gaps are real).
-    // Three unrolled rounds, each ONE anti-join of the (source, gram)
-    // frame against the covered set + a sources-sized argmax — never a
-    // 2^sources enumeration; the covered set grows vocabulary-shaped,
-    // exactly what the anti-join shuffles. Ties by source name;
-    // cumulative coverage in exact ppm of total distinct grams.
+    // Three rounds, each ONE aggregate over a persisted per-gram frame
+    // whose sources-sized result the driver reads (see [[greedySetCover]]).
+    // Ties by source name; cumulative coverage in exact ppm of total
+    // distinct grams.
     Q("q188_greedy_set_cover",
       Some("""WITH toks AS (SELECT source, string_split(text, ' ') AS ts FROM documents),
              |st AS (SELECT DISTINCT source, tok
@@ -2796,49 +2797,7 @@ object MiscQueries {
              |SELECT CAST(r.round AS BIGINT) AS round, r.source, r.gain,
              |       CAST(SUM(r.gain) OVER (ORDER BY r.round) * 1000000 // tot.n AS BIGINT) AS cum_cover_ppm
              |FROM r CROSS JOIN tot ORDER BY round""".stripMargin),
-      (s, d) => {
-        import graft.operators.CacheScope
-        CacheScope.release("q188")
-        // r15 (guide §1.2/§2.5 input parallelism + §4 expression choice):
-        // documents.parquet is ONE byte-sized scan partition, so the
-        // bigram explode + map-side dedup ran single-threaded; hash-
-        // repartition first (the TextQueries.docs rule). The bigrams now
-        // come from the native codegen WordNgrams kernel instead of an
-        // interpreted transform/sequence/element_at chain — identical
-        // strings (windows of 2 joined by ' ').
-        val st = CacheScope.persist("q188",
-          Tables.documents(s, d)
-            .repartition(col("doc_id"))
-            .select(col("source"),
-              explode(graft.functions.NativeText.wordNgrams(col("text"), 2)).as("tok"))
-            .distinct())
-        val tot = st.select(col("tok")).distinct().agg(count(lit(1)).as("n"))
-        def pick(frame: org.apache.spark.sql.DataFrame) =
-          frame.orderBy(col("gain").desc, col("source")).limit(1)
-        val w1 = pick(st.groupBy("source").agg(count(lit(1)).as("gain")))
-        // c1 feeds BOTH round 2's anti-join and round 3's covered union —
-        // persist or the winner join + distinct recompute per consumer
-        val c1 = CacheScope.persist("q188",
-          st.join(w1.select("source"), "source").select("tok").distinct())
-        val w2 = pick(st
-          .join(w1.select("source"), Seq("source"), "left_anti")
-          .join(c1, Seq("tok"), "left_anti")
-          .groupBy("source").agg(count(lit(1)).as("gain")))
-        val c2 = c1.unionAll(
-          st.join(w2.select("source"), "source").select("tok")).distinct()
-        val w3 = pick(st
-          .join(w1.select("source").unionAll(w2.select("source")), Seq("source"), "left_anti")
-          .join(c2, Seq("tok"), "left_anti")
-          .groupBy("source").agg(count(lit(1)).as("gain")))
-        val r = w1.withColumn("round", lit(1L))
-          .unionAll(w2.withColumn("round", lit(2L)))
-          .unionAll(w3.withColumn("round", lit(3L)))
-        r.crossJoin(broadcast(tot))
-          .withColumn("cum_cover_ppm",
-            expr("sum(gain) over (order by round rows between unbounded preceding and current row) * 1000000 div n"))
-          .select(col("round"), col("source"), col("gain"), col("cum_cover_ppm"))
-          .orderBy("round")
-      }),
+      (s, d) => greedySetCover(s, d)),
 
     // ---- q191: session depth & bounce profile — the product-analytics
     // daily report over q43's sessionization: per session-start day, how
@@ -2883,4 +2842,60 @@ object MiscQueries {
           .orderBy("day")
       })
   )
+
+  /** q188's greedy set cover, as source-sized driver rounds.
+    *
+    * The bigrams are persisted once as `(tok, srcs)`: each distinct gram
+    * with the set of sources that contain it. A round is then ONE aggregate
+    * over that frame — a source's gain is the number of its grams that no
+    * chosen source contains — and its result is collected. That result has
+    * at most one row per source, so the driver state is bounded by the
+    * number of sources per round, never by the vocabulary or by the
+    * 2^sources subsets a histogram of `srcs` would hold. The driver picks
+    * the winner (largest gain, then the lowest source in Spark's byte order
+    * — the oracle's `ORDER BY gain DESC, source`) and the exact cumulative
+    * coverage `sum(gain) * 1000000 div total`. A round where no source has a
+    * positive gain ends the cover, as the oracle's empty `GROUP BY` adds no
+    * row. Documents without a source add their grams to the total only.
+    * Returns the ≤ 3 rows as a local frame.
+    */
+  private def greedySetCover(s: SparkSession, d: String): DataFrame = {
+    val rounds = 3
+    val grams = Tables.documents(s, d)
+      // documents.parquet is one scan partition: spread the bigram explode
+      // and its map-side dedup over every core first
+      .repartition(col("doc_id"))
+      .select(col("source"), explode(NativeText.wordNgrams(col("text"), 2)).as("tok"))
+      .groupBy("tok").agg(collect_set(col("source")).as("srcs"))
+      .persist()
+    try {
+      val total = grams.count()
+      // the round's winner among the sources none of `chosen` covers
+      def winner(chosen: Seq[String]): Option[(String, Long)] = {
+        val open = if (chosen.isEmpty) grams
+          else grams.filter(!arrays_overlap(col("srcs"), typedLit(chosen)))
+        open.select(explode(col("srcs")).as("source"))
+          .groupBy("source").agg(count(lit(1)).as("gain"))
+          .collect()
+          .map(r => (r.getString(0), r.getLong(1)))
+          .minByOption { case (src, gain) => (-gain, UTF8String.fromString(src)) }
+      }
+      @scala.annotation.tailrec
+      def cover(picks: Vector[(String, Long)]): Vector[(String, Long)] =
+        if (picks.size == rounds) picks
+        else winner(picks.map(_._1)) match {
+          case Some(w) => cover(picks :+ w)
+          case None => picks
+        }
+      val picks = cover(Vector.empty)
+      val rows = picks.zip(picks.scanLeft(0L)(_ + _._2).tail).zipWithIndex.map {
+        case (((src, gain), cum), i) => Row(i + 1L, src, gain, cum * 1000000L / total)
+      }
+      s.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
+        StructField("round", LongType, nullable = false),
+        StructField("source", StringType),
+        StructField("gain", LongType, nullable = false),
+        StructField("cum_cover_ppm", LongType, nullable = false))))
+    } finally { grams.unpersist(); () }
+  }
 }

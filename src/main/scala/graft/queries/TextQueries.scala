@@ -1198,7 +1198,7 @@ object TextQueries {
     // is why the oracle can be the brute-force all-pairs join: full
     // recall is PROVEN on every correctness run, not asserted. Band width
     // is the corpus-size knob (fan-in per bucket = n / 2^bits), AUTO-SIZED
-    // from a cheap corpus count via SimHashBands.bandBitsFor (r6): 8-bit
+    // from the footer row count via SimHashBands.bandBitsFor (r6): 8-bit
     // at sf scales, 16-bit past 16k docs — the declared query and
     // ScaleBench's 2M-doc run now share the one banding/verify code path
     // (graft.operators.SimHashBands), so the scale measurement certifies
@@ -1216,8 +1216,8 @@ object TextQueries {
            |ORDER BY i, j""".stripMargin),
       (s, d) => {
         import graft.operators.SimHashBands
-        // parquet-metadata count — one cheap job that sizes the bands
-        val bits = SimHashBands.bandBitsFor(Tables.documents(s, d).count())
+        // parquet-footer row count, read on the driver, sizes the bands
+        val bits = SimHashBands.bandBitsFor(Tables.rowCount(d, "documents"))
         val sim = simhash64Fp(s, d, "q82") // persisted: kernel runs once
         val bands = SimHashBands.bandsOf(sim, bits)
         SimHashBands.verifiedPairs(bands, bands, col("a.doc_id") < col("b.doc_id"))
@@ -1256,7 +1256,7 @@ object TextQueries {
       (s, d) => {
         import graft.operators.SimHashBands
         import graft.sources.Derived
-        val bits = SimHashBands.bandBitsFor(Tables.documents(s, d).count())
+        val bits = SimHashBands.bandBitsFor(Tables.rowCount(d, "documents"))
         def fpOf(df: org.apache.spark.sql.DataFrame) = df
           .select(col("doc_id"),
             NativeText.simhash64(NativeText.shingleHashesOfText(col("text"))).as("fp"))
@@ -1405,7 +1405,7 @@ object TextQueries {
            |ORDER BY cluster_id""".stripMargin),
       (s, d) => {
         import graft.operators.{CacheScope, Components, SimHashBands}
-        val bits = SimHashBands.bandBitsFor(Tables.documents(s, d).count())
+        val bits = SimHashBands.bandBitsFor(Tables.rowCount(d, "documents"))
         val sim = simhash64Fp(s, d, "q91") // persisted: kernel runs once
         val bands = SimHashBands.bandsOf(sim, bits)
         // the edge list feeds nodes + CC (and CC reads it twice more):
@@ -1942,7 +1942,7 @@ object TextQueries {
            |FROM b ORDER BY doc_id""".stripMargin),
       (s, d) => {
         import graft.operators.{CacheScope, Components, SimHashBands}
-        val bits = SimHashBands.bandBitsFor(Tables.documents(s, d).count())
+        val bits = SimHashBands.bandBitsFor(Tables.rowCount(d, "documents"))
         val sim = simhash64Fp(s, d, "q118") // persisted: kernel runs once
         val bands = SimHashBands.bandsOf(sim, bits)
         val e = CacheScope.persist("q118",
@@ -1966,9 +1966,9 @@ object TextQueries {
     // MERGES fields across a duplicate cluster instead of electing one
     // row (q91): representative doc by (longest, lowest id), language by
     // MODE with a deterministic lexicographic tie-break, char mass
-    // summed. Each field rule is a window or aggregate over members —
-    // per-cluster fan-in bounded by true duplication; singletons pass
-    // through as their own golden record. The field-rule vocabulary
+    // summed. Each field rule is an aggregate over members — per-cluster
+    // fan-in bounded by true duplication; singletons pass through as
+    // their own golden record. The field-rule vocabulary
     // (latest/longest/most-frequent/sum) is the standard MDM set; two of
     // them compose here and the rest are the same shapes.
     Q("q128_golden_record",
@@ -2003,7 +2003,7 @@ object TextQueries {
            |GROUP BY 1 ORDER BY cluster_id""".stripMargin),
       (s, d) => {
         import graft.operators.{CacheScope, Components, SimHashBands}
-        val bits = SimHashBands.bandBitsFor(Tables.documents(s, d).count())
+        val bits = SimHashBands.bandBitsFor(Tables.rowCount(d, "documents"))
         val sim = simhash64Fp(s, d, "q128") // persisted: kernel runs once
         val bands = SimHashBands.bandsOf(sim, bits)
         val e = CacheScope.persist("q128",
@@ -2015,20 +2015,21 @@ object TextQueries {
         val memb = dd.join(clus, dd("doc_id") === clus("id"), "left")
           .select(coalesce(col("cluster_id"), col("doc_id")).as("cid"),
             col("doc_id"), col("lang"), col("n_chars"))
-        val repW = Window.partitionBy(col("cid"))
-          .orderBy(col("n_chars").desc, col("doc_id"))
-        val langCnt = memb.groupBy("cid", "lang").agg(count(lit(1)).as("cnt"))
-        val langW = Window.partitionBy(col("cid"))
-          .orderBy(col("cnt").desc, col("lang"))
-        val golden = langCnt.withColumn("r", row_number().over(langW))
-          .filter(col("r") === 1)
-          .select(col("cid"), col("lang").as("golden_lang"))
-        memb.withColumn("r", row_number().over(repW))
+        // every field rule is an extremum of a struct, so one two-level
+        // aggregate computes them all, (cid, lang) then cid: the
+        // representative is the max of (n_chars, ~doc_id) — longest, then
+        // lowest id, as ~ reverses the order of longs and cannot overflow;
+        // the language mode is the min of (-cnt, lang). Partitioning by
+        // cid once serves both levels, so they share one exchange
+        memb.repartition(col("cid")).groupBy("cid", "lang")
+          .agg(count(lit(1)).as("cnt"), sum(col("n_chars")).as("chars"),
+            max(struct(col("n_chars"), bitwise_not(col("doc_id")).as("not_id"))).as("rep"))
           .groupBy("cid")
-          .agg(count(lit(1)).as("n_docs"),
-            min(when(col("r") === 1, col("doc_id"))).as("rep_doc"),
-            sum(col("n_chars")).as("total_chars"))
-          .join(golden, "cid")
+          .agg(sum(col("cnt")).as("n_docs"),
+            bitwise_not(max(col("rep")).getField("not_id")).as("rep_doc"),
+            min(struct((-col("cnt")).as("neg_cnt"), col("lang"))).getField("lang")
+              .as("golden_lang"),
+            sum(col("chars")).as("total_chars"))
           .select(col("cid").as("cluster_id"), col("n_docs"), col("rep_doc"),
             col("golden_lang"), col("total_chars"))
           .orderBy("cluster_id")
@@ -2238,7 +2239,7 @@ object TextQueries {
               |FROM r WHERE rnk = 1 ORDER BY doc_id""".stripMargin),
       (s, d) => {
         import graft.operators.SimHashBands
-        val bits = SimHashBands.bandBitsFor(Tables.documents(s, d).count())
+        val bits = SimHashBands.bandBitsFor(Tables.rowCount(d, "documents"))
         val sim = simhash64Fp(s, d, "q147") // persisted: kernel runs once
         val bands = SimHashBands.bandsOf(sim, bits)
         val pairs = SimHashBands.verifiedPairs(bands, bands,
@@ -2371,7 +2372,7 @@ object TextQueries {
               |FROM m GROUP BY 1, 2 ORDER BY s_a, s_b""".stripMargin),
       (s, d) => {
         import graft.operators.SimHashBands
-        val bits = SimHashBands.bandBitsFor(Tables.documents(s, d).count())
+        val bits = SimHashBands.bandBitsFor(Tables.rowCount(d, "documents"))
         val sim = docs(s, d)
           .select(col("doc_id"),
             NativeText.simhash64(NativeText.shingleHashesOfText(col("text"))).as("fp"))

@@ -85,6 +85,30 @@ object Tables {
     catch { case _: Throwable => Long.MaxValue }
   }
 
+  /** Row count of a harness table from its parquet footers, read on the
+    * driver: a metadata read per file and no Spark job, where
+    * `Tables.documents(s, d).count()` runs one. */
+  def rowCount(sfDir: String, name: String): Long =
+    parquetRowCount(new java.io.File(sfDir, s"$name.parquet"))
+
+  /** Sum of the parquet-footer record counts of a parquet file, or of the
+    * `.parquet` files directly under a directory — a KB metadata read per
+    * file, never a row scan. A path that is neither fails. */
+  def parquetRowCount(path: java.io.File): Long = {
+    val files =
+      if (path.isFile) Array(path)
+      else if (path.isDirectory) path.listFiles().filter(_.getName.endsWith(".parquet"))
+      else throw new java.io.FileNotFoundException(s"no parquet file or directory at $path")
+    val conf = new org.apache.hadoop.conf.Configuration(false)
+    conf.set("fs.file.impl", classOf[org.apache.hadoop.fs.LocalFileSystem].getName)
+    files.map { f =>
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.getAbsolutePath), conf)
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try r.getRecordCount finally r.close()
+    }.sum
+  }
+
   /** CSV scan with header + explicit schema; accepts a glob so a year of
     * monthly files is ONE distributed read, not a per-file driver loop
     * (ref: etl/extract.py:60-92 unions 12 files one by one on the driver).

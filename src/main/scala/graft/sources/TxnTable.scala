@@ -1336,7 +1336,7 @@ object TxnTable {
         try {
           import scala.jdk.CollectionConverters._
           pool.invokeAll(byDir.map { case (leaf, _) =>
-            (() => footerRowCount(leaf)): java.util.concurrent.Callable[Long]
+            (() => Tables.parquetRowCount(leaf)): java.util.concurrent.Callable[Long]
           }.asJava).asScala.toSeq.map(_.get())
         } finally { pool.shutdown(); () }
       val published = byDir.zip(counts).map { case ((leaf, vs), n) =>
@@ -1369,21 +1369,6 @@ object TxnTable {
       // unreferenced — vacuum's orphan sweep reaps the root wholesale.
       if (!(ok && inPlaceData(tableDir))) deleteRec(bulkRoot)
     }
-  }
-
-  /** Sum of parquet-footer record counts under `dir` — a KB metadata
-    * read per part-file, never a row scan. */
-  private def footerRowCount(dir: File): Long = {
-    val conf = new org.apache.hadoop.conf.Configuration(false)
-    conf.set("fs.file.impl", classOf[org.apache.hadoop.fs.LocalFileSystem].getName)
-    Option(dir.listFiles()).getOrElse(Array.empty[File])
-      .filter(_.getName.endsWith(".parquet"))
-      .map { f =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f.getAbsolutePath), conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }.sum
   }
 
   /** PARTITIONED atomic overwrite: replace exactly the partitions whose
@@ -2126,7 +2111,7 @@ object TxnTable {
             s"$c:${mins.mkString(",")}".getBytes("UTF-8")): Unit
         }
         r.getLong(0)
-      case None => footerRowCount(dir)
+      case None => Tables.parquetRowCount(dir)
     }
     // write-time CHECK + generated-column enforcement: EVERY row
     // entering the table passes through stage, so this one gate covers
@@ -4054,7 +4039,7 @@ object TxnTable {
     val name = s"dv-${UUID.randomUUID()}"
     val dest = new File(dataDir(tableDir), name)
     all.coalesce(1).write.parquet(dest.getPath)
-    val n = footerRowCount(dest)
+    val n = Tables.parquetRowCount(dest)
     val oldN = snap.dvs.get(dir).flatMap(nrowsOf(tableDir, _)).getOrElse(0L)
     if (n == 0L) { deleteRec(dest); None }
     else if (n == oldN) { deleteRec(dest); snap.dvs.get(dir) } // nothing new
@@ -4213,7 +4198,7 @@ object TxnTable {
     val dest = new File(dataDir(tableDir), eqName)
     keys.select(keyCols.map(keys.col): _*).distinct().coalesce(1)
       .write.parquet(dest.getPath)
-    val n = footerRowCount(dest)
+    val n = Tables.parquetRowCount(dest)
     Files.write(new File(dest, ".nrows").toPath, n.toString.getBytes("UTF-8"))
     publishRebasing(tableDir, snap, "delete", Set.empty, Nil, applies.toSet,
       addCheck, txnId, eqAdd = Some(eqName -> ((keyCols, applies))))

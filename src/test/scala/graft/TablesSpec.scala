@@ -47,6 +47,22 @@ class TablesSpec extends SparkTestBase {
     assert(jobsDuring(Tables.orders(spark, dir).schema) == 0)
   }
 
+  test("rowCount equals count() for every table at every scale, and runs no job") {
+    assert(scales.nonEmpty, "no harness testdata found")
+    for (dir <- scales; (name, read) <- harness) {
+      var n = -1L
+      assert(jobsDuring { n = Tables.rowCount(dir, name) } == 0, s"$name at $dir")
+      assert(n == read(spark, dir).count(), s"$name at $dir")
+    }
+  }
+
+  test("rowCount sums a directory's parquet files and fails on a missing path") {
+    val dir = Files.createTempDirectory("graft-tables").toString
+    spark.range(7).repartition(3).write.parquet(s"$dir/t.parquet")
+    assert(Tables.rowCount(dir, "t") == 7L)
+    assertThrows[java.io.FileNotFoundException](Tables.rowCount(dir, "absent"))
+  }
+
   // q87's default persist cap (SPARK_GRAFT_PERSIST_CAP_BYTES unset)
   private val q87Cap = 8L << 30
 

@@ -15,9 +15,11 @@ BENCHMARK.json declares for the chosen trace mode, the report gives:
 - the change/parent ratio of the medians and, for end-to-end metrics, how far
   the change is worse than the parent against the metric's bound.
 
-The runs' correctness (failed operations over attempted ones) is reported too.
-The tool reads only the change checkout's BENCHMARK.json, and runs each
-checkout's own perfbench/run.py.
+The runs' correctness (failed operations over attempted ones) is reported too,
+and so is each operation's median latency on each side (per query, or per
+batch and analytic), read from every run's record, so a claim can show which
+operation moved. The tool reads only the change checkout's BENCHMARK.json,
+and runs each checkout's own perfbench/run.py.
 """
 import argparse
 import json
@@ -42,6 +44,40 @@ def run_once(checkout, workload, seed, seconds, trace):
         sys.stderr.write(p.stderr[-2000:])
         return None
     return json.loads(lines[-1])
+
+
+def op_latencies(checkout, workload, trace):
+    """Latencies (ms) of the timed, untraced operations of the run that just
+    finished in `checkout`, by operation: `query <name>`, `batch` (one file a
+    day, so batches pool) or `analytic <name>`."""
+    path = os.path.join(checkout, ".bench_build", "runs", f"{workload}-trace{trace}", "run.json")
+    try:
+        with open(path) as f:
+            record = json.load(f)
+    except (OSError, ValueError):
+        return {}
+    out = {}
+    for o in record["ops"]:
+        if o["ok"] and not o["traced"] and not o["warmup"]:
+            key = o["kind"] if o["kind"] == "batch" else f"{o['kind']} {o['name']}"
+            out.setdefault(key, []).append(o["ms"])
+    return out
+
+
+def op_report(runs):
+    """Per operation: each side's median latency over all its runs' samples."""
+    pooled = {}
+    for r in runs:
+        for key, xs in r["op_ms"].items():
+            pooled.setdefault(key, {"parent": [], "change": []})[r["side"]].extend(xs)
+    rows = []
+    for key, sides in sorted(pooled.items()):
+        mp = statistics.median(sides["parent"]) if sides["parent"] else None
+        mc = statistics.median(sides["change"]) if sides["change"] else None
+        rows.append({"op": key, "parent_median_ms": mp, "change_median_ms": mc,
+                     "parent_n": len(sides["parent"]), "change_n": len(sides["change"]),
+                     "ratio": mc / mp if mp and mc is not None else None})
+    return rows
 
 
 def spread(xs):
@@ -99,7 +135,8 @@ def main():
         got = {}
         for side, checkout in order:
             got[side] = run_once(checkout, a.workload, seed, a.seconds, a.trace)
-            runs.append({"seed": seed, "side": side, "result": got[side]})
+            op_ms = op_latencies(checkout, a.workload, a.trace) if got[side] else {}
+            runs.append({"seed": seed, "side": side, "result": got[side], "op_ms": op_ms})
             r = got[side]
             summary = "FAILED RUN" if r is None else " ".join(
                 f"{m['name']}={r['metrics'][m['name']]['value']:.4g}" for m in spec_metrics[:5])
@@ -131,11 +168,19 @@ def main():
         print(f"{r['metric']:34} {r['parent_median']:12.4g} {r['change_median']:12.4g} "
               f"{r['ratio']:7.3f} {r['parent_spread']:10.4g} {r['median_gap']:10.4g} "
               f"{wtl:>8}  {bound}")
+    ops = op_report(runs)
+    print(f"\n{'operation (median ms)':34} {'parent':>12} {'change':>12} {'ratio':>7} {'n P/C':>10}")
+    for r in ops:
+        def ms(v):
+            return f"{v:12.1f}" if v is not None else f"{'-':>12}"
+        ratio = f"{r['ratio']:7.3f}" if r["ratio"] is not None else f"{'-':>7}"
+        print(f"{r['op']:34} {ms(r['parent_median_ms'])} {ms(r['change_median_ms'])} {ratio} "
+              f"{str(r['parent_n']) + '/' + str(r['change_n']):>10}")
     if a.json:
         with open(a.json, "w") as f:
             json.dump({"workload": a.workload, "seeds": a.seeds, "seconds": a.seconds,
                        "trace": a.trace, "runs": runs, "correctness": correctness,
-                       "report": rows}, f, indent=1)
+                       "report": rows, "operations": ops}, f, indent=1)
 
 
 if __name__ == "__main__":
