@@ -58,8 +58,10 @@ object FineGourmet {
     StructField("sale_id", StringType), StructField("email", StringType),
     StructField("transaction_date", StringType), StructField("product_name", StringType),
     StructField("quantity", LongType),
-    // mixed int/float/"x" in the reference data forces string (FIXTURES.md A2)
-    StructField("price", StringType)))
+    // mixed int/float/"x" in the reference data (FIXTURES.md A2): read as
+    // VARIANT and cast to string at the scan. A STRING field over JSON
+    // numbers re-reads the file once per value (see Tables.multilineJson)
+    StructField("price", VariantType)))
 
   val ProductSchema: StructType = StructType(Seq(
     StructField("product_id", StringType), StructField("product_name", StringType),
@@ -93,7 +95,7 @@ object FineGourmet {
         to_date(col("transaction_date"), "yyyy-MM-dd").as("Transaction_Date"),
         col("product_name").as("Product_Name"),
         col("quantity").cast("int").as("Quantity"),
-        col("price").as("Price_Raw"))
+        col("price").cast("string").as("Price_Raw"))
 
   /** S1+S2: product reference CSVs (2024+2025) via glob union; keep one row
     * per Product_ID (ref: etl/extract.py:111-127, transform.py:284-299). */

@@ -102,7 +102,10 @@ object Components {
     *    the only option once edges outgrow one task.
     * Same unique min-id fixpoint either way (ComponentsSpec property-
     * checks the two paths against each other). Returns ((id, cluster_id),
-    * rounds) — rounds = 1 on the local path.
+    * rounds) — rounds = 1 on the local path. Both paths carry the node
+    * frame's other columns after `cluster_id` (none may be named `id`,
+    * `cluster_id` or `root`), so a caller needing per-node attributes
+    * gets them without joining its nodes back.
     */
   def auto(nodes: DataFrame, idCol: String,
            edges: DataFrame, srcCol: String, dstCol: String,
@@ -141,10 +144,18 @@ object Components {
         val ks = parent.keys.toArray
         ks.iterator.map(k => (k, find(k)))
       }
-      .toDF("id", "cluster_id")
-    nodes.select(col(idCol).cast("long").as("id"))
-      .join(broadcast(clusters), Seq("id"), "left")
-      .select(col("id"), coalesce(col("cluster_id"), col("id")).as("cluster_id"))
+      .toDF("id", "root")
+    assign(nodes, idCol, broadcast(clusters))
+  }
+
+  /** (id, cluster_id) per node, then the node frame's other columns:
+    * `roots` (id, root) maps an id to its component's min id, so a node
+    * absent from it is its own cluster. */
+  private def assign(nodes: DataFrame, idCol: String, roots: DataFrame): DataFrame = {
+    val rest = nodes.columns.toSeq.filterNot(_ == idCol).map(col)
+    nodes.select(col(idCol).cast("long").as("id") +: rest: _*)
+      .join(roots, Seq("id"), "left")
+      .select(col("id") +: coalesce(col("root"), col("id")).as("cluster_id") +: rest: _*)
   }
 
   private def altStarFrom(nodes: DataFrame, idCol: String, e0: DataFrame): (DataFrame, Int) = {
@@ -184,9 +195,6 @@ object Components {
       cert = nextCert
       rounds += 1
     }
-    val out = nodes.select(col(idCol).cast("long").as("id"))
-      .join(e.withColumnRenamed("u", "id"), Seq("id"), "left")
-      .select(col("id"), coalesce(col("p"), col("id")).as("cluster_id"))
-    (out, rounds)
+    (assign(nodes, idCol, e.select(col("u").as("id"), col("p").as("root"))), rounds)
   }
 }

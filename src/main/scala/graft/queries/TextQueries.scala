@@ -1947,12 +1947,10 @@ object TextQueries {
         val bands = SimHashBands.bandsOf(sim, bits)
         val e = CacheScope.persist("q118",
           SimHashBands.verifiedPairs(bands, bands, col("a.doc_id") < col("b.doc_id")))
-        val nodes = e.select(col("i").as("doc_id"))
-          .union(e.select(col("j").as("doc_id"))).distinct()
-        val clus = Components.auto(nodes, "doc_id", e, "i", "j")._1
-        val dd = docs(s, d).select(col("doc_id"))
-        val asg = dd.join(clus, dd("doc_id") === clus("id"), "left")
-          .select(col("doc_id"), coalesce(col("cluster_id"), col("doc_id")).as("cid"))
+        // every document is a node, so Components' (id, cluster_id) is
+        // already the assignment: a doc on no edge is its own cluster
+        val asg = Components.auto(docs(s, d).select(col("doc_id")), "doc_id", e, "i", "j")._1
+          .select(col("id").as("doc_id"), col("cluster_id").as("cid"))
         asg
           .withColumn("pp",
             conv(substring(md5(col("cid").cast("string")), 1, 6), 16, 10)
@@ -2008,13 +2006,13 @@ object TextQueries {
         val bands = SimHashBands.bandsOf(sim, bits)
         val e = CacheScope.persist("q128",
           SimHashBands.verifiedPairs(bands, bands, col("a.doc_id") < col("b.doc_id")))
-        val nodes = e.select(col("i").as("doc_id"))
-          .union(e.select(col("j").as("doc_id"))).distinct()
-        val clus = Components.auto(nodes, "doc_id", e, "i", "j")._1
-        val dd = docs(s, d).select(col("doc_id"), col("lang"), col("n_chars"))
-        val memb = dd.join(clus, dd("doc_id") === clus("id"), "left")
-          .select(coalesce(col("cluster_id"), col("doc_id")).as("cid"),
-            col("doc_id"), col("lang"), col("n_chars"))
+        // every document is a node and carries its fields through, so
+        // Components' output is the member list: a doc on no edge is its
+        // own cluster, a NULL doc_id keeps a NULL cid
+        val memb = Components.auto(docs(s, d).select(col("doc_id"), col("lang"),
+            col("n_chars")), "doc_id", e, "i", "j")._1
+          .select(col("cluster_id").as("cid"), col("id").as("doc_id"), col("lang"),
+            col("n_chars"))
         // every field rule is an extremum of a struct, so one two-level
         // aggregate computes them all, (cid, lang) then cid: the
         // representative is the max of (n_chars, ~doc_id) — longest, then

@@ -144,6 +144,10 @@ object Tables {
   /** Multiline JSON (array-of-objects) scan with explicit schema
     * (ref: etl/extract.py:95-104). `multiLine=true` means one file is one
     * task — fine for small control files; large JSON should be JSONL.
+    * A `StringType` field over JSON NUMBERS costs one positioned read of
+    * the file per value on Spark 4.1 (the parser re-reads the number's
+    * exact text from the file), so a 3 MB file can read ~90 MB; declare
+    * such a mixed field `VariantType` and cast it to string instead.
     */
   def multilineJson(spark: SparkSession, schema: StructType, path: String): DataFrame =
     spark.read.option("multiLine", "true").schema(schema).json(path)

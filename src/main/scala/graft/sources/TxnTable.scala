@@ -3228,7 +3228,10 @@ object TxnTable {
     * commit with the same manifest-stats rewrite pruning: dirs whose
     * key bounds are disjoint from the source keys keep their place
     * untouched (they can hold no matched row, and not-matched
-    * semantics only need the touched dirs for the same reason).
+    * semantics only need the touched dirs for the same reason). The
+    * rewrite is ONE pass over the touched dirs: one full-outer key join,
+    * one filter and one projection whose per-column CASE takes the
+    * matched, not-matched-by-source or insert value by the row's side.
     *
     * Conditions/SETs may reference BOTH sides: target columns by name,
     * source non-key columns as `_src_<name>` (the Delta
@@ -3312,46 +3315,34 @@ object TxnTable {
         "SET on a merge key is not supported — delete + insert instead")
       case _ => ()
     }
-    // first-true-condition-wins fold: NULL condition = not fired (SQL)
-    def fires(c: org.apache.spark.sql.Column) = coalesce(c, lit(false))
-    val deleted = whenMatched.foldRight(lit(false)) { (cl, rest) =>
-      when(fires(cl.cond), lit(cl.isInstanceOf[MatchedDelete])).otherwise(rest)
-    }
-    def valueOf(c: String) =
-      if (keyCols.contains(c)) col(c) // the coalesced USING-join key
-      else whenMatched.foldRight(current.col(c)) { (cl, rest) =>
-        cl match {
-          case MatchedUpdate(cond, set) if set.contains(c) =>
-            when(fires(cond), set(c).cast(current.schema(c).dataType)).otherwise(rest)
-          case other => when(fires(other.cond), current.col(c)).otherwise(rest)
-        }
-      }
-    val matchedKept = joined.filter(isTgt && isSrc && !deleted)
-      .select(tgtCols.map(c => valueOf(c).as(c)): _*)
-    // by-source clauses: same first-true-wins fold over the NOT-matched
-    // target rows (conditions/SETs see target columns only — a `_src_*`
+    // first-true-condition-wins fold: NULL condition = not fired (SQL).
+    // by-source clauses fold the same way over the NOT-matched target
+    // rows (conditions/SETs see target columns only — a `_src_*`
     // reference is NULL there, so such a condition simply never fires)
-    val deletedNS = whenNotMatchedBySource.foldRight(lit(false)) { (cl, rest) =>
+    def fires(c: org.apache.spark.sql.Column) = coalesce(c, lit(false))
+    def deletes(clauses: Seq[MatchedClause]) = clauses.foldRight(lit(false)) { (cl, rest) =>
       when(fires(cl.cond), lit(cl.isInstanceOf[MatchedDelete])).otherwise(rest)
     }
-    def valueOfNS(c: String) =
-      if (keyCols.contains(c)) col(c) // the coalesced USING-join key
-      else whenNotMatchedBySource.foldRight(current.col(c)) { (cl, rest) =>
+    def valueIn(clauses: Seq[MatchedClause], c: String) =
+      clauses.foldRight(current.col(c)) { (cl, rest) =>
         cl match {
           case MatchedUpdate(cond, set) if set.contains(c) =>
             when(fires(cond), set(c).cast(current.schema(c).dataType)).otherwise(rest)
           case other => when(fires(other.cond), current.col(c)).otherwise(rest)
         }
       }
-    val unmatchedTgt = joined.filter(isTgt && !isSrc && !deletedNS)
-      .select(tgtCols.map(c => valueOfNS(c).as(c)): _*)
-    val inserts =
-      if (!insertNotMatched) current.limit(0)
-      else joined.filter(!isTgt && isSrc && fires(insertCond))
-        .select(tgtCols.map(c =>
-          (if (keyCols.contains(c)) col(c)
-           else col(s"_src_$c").cast(current.schema(c).dataType)).as(c)): _*)
-    val rewritten = matchedKept.unionByName(unmatchedTgt).unionByName(inserts)
+    // ONE pass over the key join, so it is planned and shuffled once: a
+    // row survives by its own side's rule, and each column is a CASE on
+    // the side, so a clause's condition and SETs are evaluated only on
+    // the rows they can fire for (AND/OR and CASE short-circuit)
+    val keep = (isTgt && isSrc && !deletes(whenMatched)) ||
+      (isTgt && !isSrc && !deletes(whenNotMatchedBySource)) ||
+      (!isTgt && lit(insertNotMatched) && fires(insertCond))
+    val rewritten = joined.filter(keep).select(tgtCols.map(c =>
+      (if (keyCols.contains(c)) col(c) // the coalesced USING-join key
+       else when(isTgt && isSrc, valueIn(whenMatched, c))
+         .when(isTgt, valueIn(whenNotMatchedBySource, c))
+         .otherwise(col(s"_src_$c").cast(current.schema(c).dataType))).as(c)): _*)
     val staged = stage(rewritten, tableDir, Some(key).filter(_ => hasStats))
     publishRebasing(tableDir, snap, "merge", touched.toSet, Seq(staged),
       touched.toSet,

@@ -76,4 +76,18 @@ class ComponentsSpec extends SparkTestBase {
     val got = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
   }
+
+  test("auto: both paths carry the nodes' other columns, a NULL id keeps a NULL cluster") {
+    val nodes = Seq((Some(1L), "a"), (Some(2L), "b"), (Some(3L), "c"), (None, "n"))
+      .toDF("doc", "tag")
+    val edges = Seq((1L, 2L)).toDF("s", "t")
+    for (gate <- Seq(4000000L, 0L)) {
+      val (out, _) = Components.auto(nodes, "doc", edges, "s", "t", localMaxEdges = gate)
+      assert(out.columns.toSeq == Seq("id", "cluster_id", "tag"))
+      val got = out.collect().map(r => r.getString(2) -> (Option(r.get(0)), Option(r.get(1))))
+        .toMap
+      assert(got == Map("a" -> (Some(1L), Some(1L)), "b" -> (Some(2L), Some(1L)),
+        "c" -> (Some(3L), Some(3L)), "n" -> (None, None)), s"gate $gate: $got")
+    }
+  }
 }

@@ -134,6 +134,36 @@ class FineGourmetEtlSpec extends SparkTestBase {
     assert(byId("PA01240100001").isNullAt(5)) // null email -> no client FK
   }
 
+  test("CEGID extract reads its file once and keeps every price form") {
+    import org.apache.spark.sql.functions.col
+    import graft.operators.Cleaning
+    val file = Files.createTempDirectory("cegid-prices").resolve("cegid.json")
+    // ≥ 200 JSON-number prices: a reader that re-reads the file per
+    // numeric value reads it hundreds of times over
+    val numeric = (1 to 240).map(i => s"""{"sale_id": "N$i", "quantity": 1, "price": $i.25}""")
+    val edge = Seq(
+      """{"sale_id": "INT", "price": 18}""",
+      """{"sale_id": "FLOAT", "price": 9.9}""",
+      """{"sale_id": "T1", "price": 22.0}""",
+      """{"sale_id": "T2", "price": 21.80}""",
+      """{"sale_id": "STR", "price": "12.5"}""",
+      """{"sale_id": "X", "price": "x"}""",
+      """{"sale_id": "NUL", "price": null}""",
+      """{"sale_id": "ABSENT"}""")
+    Files.writeString(file, (numeric ++ edge).mkString("[\n  ", ",\n  ", "\n]\n"))
+    val extracted = FineGourmet.extractCegid(spark, file.toString)
+    val bytes = inputBytesDuring(extracted.collect(): Unit)
+    assert(bytes <= Files.size(file), s"read $bytes bytes of a ${Files.size(file)}-byte file")
+    val price = extracted.select(col("Sale_ID"), Cleaning.validatedPrice(col("Price_Raw")))
+      .collect().map(r => r.getString(0) -> Option(r.get(1))).toMap
+    assert(price.size == 248)
+    assert((1 to 240).forall(i => price(s"N$i").contains(i + 0.25)))
+    assert(price("INT").contains(18.0) && price("FLOAT").contains(9.9) &&
+      price("T1").contains(22.0) && price("T2").contains(21.8) &&
+      price("STR").contains(12.5), s"got $price")
+    assert(price("X").isEmpty && price("NUL").isEmpty && price("ABSENT").isEmpty)
+  }
+
   test("parity: the full ETL over the reference's OWN data files reproduces its documented star") {
     // Input data only — no reference code is executed. Guarded so the suite
     // still passes where the reference snapshot isn't mounted.

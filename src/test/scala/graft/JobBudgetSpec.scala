@@ -22,7 +22,7 @@ class JobBudgetSpec extends SparkTestBase {
     assert(jobs("q188_greedy_set_cover") <= 12)
   }
 
-  test("q128 golden record: at most 15 jobs") {
-    assert(jobs("q128_golden_record") <= 15)
+  test("q128 golden record: at most 14 jobs") {
+    assert(jobs("q128_golden_record") <= 14)
   }
 }

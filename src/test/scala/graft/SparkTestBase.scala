@@ -1,9 +1,9 @@
 package graft
 
 import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -27,16 +27,30 @@ abstract class SparkTestBase extends AnyFunSuite {
   /** Spark jobs started from this thread while `body` runs. Listener events
     * are asynchronous but ordered, so a sentinel job started after `body`
     * marks the point by which every job of `body` has been seen. */
-  protected def jobsDuring(body: => Unit): Int = {
+  protected def jobsDuring(body: => Unit): Int = probe(body)._1
+
+  /** Bytes the tasks of the jobs `body` starts read from their input
+    * (`inputMetrics.bytesRead`, summed), seen the same way. */
+  protected def inputBytesDuring(body: => Unit): Long = probe(body)._2
+
+  private def probe(body: => Unit): (Int, Long) = {
     val group = s"jobs-during-${System.nanoTime}"
     val jobs = new AtomicInteger(0)
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val bytesRead = new AtomicLong(0L)
     val sentinelSeen = new CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet(); ()
+          case Some(`group`) =>
+            jobs.incrementAndGet()
+            e.stageIds.foreach(stages.add)
           case Some(g) if g == s"$group-sentinel" => sentinelSeen.countDown()
           case _ => ()
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null) {
+          bytesRead.addAndGet(e.taskMetrics.inputMetrics.bytesRead); ()
         }
     }
     val sc = spark.sparkContext
@@ -51,7 +65,7 @@ abstract class SparkTestBase extends AnyFunSuite {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
-    jobs.get()
+    (jobs.get(), bytesRead.get())
   }
 
   /** Run independent test units concurrently on a bounded pool. The heavy

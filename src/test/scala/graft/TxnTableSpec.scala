@@ -2100,6 +2100,49 @@ class TxnTableSpec extends SparkTestBase {
     assert(rows(dir) == Seq((1, "a"), (3, "c")))
   }
 
+  test("mergeInto on a string key is one pass: at most 5 jobs on a one-dir table") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val dir = tmpTable()
+    TxnTable.append((1 to 40).map(i => (f"S$i%03d", i.toLong)).toDF("sale", "amt")
+      .coalesce(1), dir)
+    val src = Seq(("S002", 200L), ("S010", 1000L), ("S900", 9L)).toDF("sale", "amt")
+    val n = jobsDuring(TxnTable.mergeInto(spark, dir, src, Seq("sale"),
+      Seq(TxnTable.MatchedUpdate(lit(true), Map("amt" -> col("_src_amt"))))): Unit)
+    info(s"mergeInto: $n jobs")
+    assert(n <= 5, s"mergeInto ran $n jobs")
+    val got = TxnTable.read(spark, dir).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(got.size == 41 && got("S002") == 200L && got("S010") == 1000L &&
+      got("S900") == 9L && got("S003") == 3L, s"got $got")
+  }
+
+  test("mergeInto evaluates a clause's SET only on the rows it can fire for") {
+    import org.apache.spark.sql.functions.col
+    import TxnTable.MatchedUpdate
+    // `v / d` divides by zero on the target-only rows and `v / e` on the
+    // matched ones; under ANSI either would fail the merge if evaluated
+    // on a row of the other side
+    val dir = tmpTable()
+    TxnTable.append(Seq(("a", 10L, 2L, 0L), ("b", 20L, 4L, 0L), ("c", 30L, 0L, 5L))
+      .toDF("k", "v", "d", "e"), dir)
+    val src = Seq(("a", 0L, 0L, 0L), ("b", 0L, 0L, 0L), ("z", 7L, 0L, 0L))
+      .toDF("k", "v", "d", "e")
+    TxnTable.mergeInto(spark, dir, src, Seq("k"),
+      whenMatched = Seq(MatchedUpdate(col("d") =!= 3L, Map("v" -> col("v") / col("d")))),
+      whenNotMatchedBySource = Seq(MatchedUpdate(col("e") > 0L,
+        Map("v" -> col("v") / col("e")))))
+    val got = TxnTable.read(spark, dir).collect()
+      .map(r => (r.getString(0), r.getLong(1))).sortBy(_._1).toSeq
+    assert(got == Seq(("a", 5L), ("b", 5L), ("c", 6L), ("z", 7L)), s"got $got")
+    // the same SET does fail once it fires on a zero divisor
+    val err = intercept[Exception] {
+      TxnTable.mergeInto(spark, dir, Seq(("c", 0L, 0L, 0L)).toDF("k", "v", "d", "e"),
+        Seq("k"), Seq(MatchedUpdate(col("d") === 0L, Map("v" -> col("v") / col("d")))))
+    }
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("DIVIDE_BY_ZERO")), err)
+    assert(TxnTable.latestVersion(dir).contains(1L))
+  }
+
   test("time travel reads every version with its own columns, across " +
       "an overwrite that adds one and a restore that drops it again") {
     val dir = tmpTable()

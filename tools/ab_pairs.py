@@ -15,6 +15,10 @@ BENCHMARK.json declares for the chosen trace mode, the report gives:
 - the change/parent ratio of the medians and, for end-to-end metrics, how far
   the change is worse than the parent against the metric's bound.
 
+For star_etl, the same comparison of `initial_load_s` (read from each run's
+run.json) is printed under `setup_s`, so a set-up change splits into the
+initial load and the rest.
+
 The runs' correctness (failed operations over attempted ones) is reported too,
 and so is each operation's median latency on each side (per query, or per
 batch and analytic), read from every run's record, so a claim can show which
@@ -46,18 +50,22 @@ def run_once(checkout, workload, seed, seconds, trace):
     return json.loads(lines[-1])
 
 
-def op_latencies(checkout, workload, trace):
-    """Latencies (ms) of the timed, untraced operations of the run that just
-    finished in `checkout`, by operation: `query <name>`, `batch` (one file a
-    day, so batches pool) or `analytic <name>`."""
+def run_record(checkout, workload, trace):
+    """The run.json of the run that just finished in `checkout`, or {}."""
     path = os.path.join(checkout, ".bench_build", "runs", f"{workload}-trace{trace}", "run.json")
     try:
         with open(path) as f:
-            record = json.load(f)
+            return json.load(f)
     except (OSError, ValueError):
         return {}
+
+
+def op_latencies(record):
+    """Latencies (ms) of a run's timed, untraced operations, by operation:
+    `query <name>`, `batch` (one file a day, so batches pool) or
+    `analytic <name>`."""
     out = {}
-    for o in record["ops"]:
+    for o in record.get("ops", []):
         if o["ok"] and not o["traced"] and not o["warmup"]:
             key = o["kind"] if o["kind"] == "batch" else f"{o['kind']} {o['name']}"
             out.setdefault(key, []).append(o["ms"])
@@ -88,28 +96,44 @@ def spread(xs):
     return q3 - q1
 
 
+def compare(m, par, chg):
+    """One report row: metric `m` over paired parent/change values."""
+    lower = m["better"] == "lower"
+    wins = sum(1 for a, b in zip(par, chg) if (b < a if lower else b > a))
+    ties = sum(1 for a, b in zip(par, chg) if a == b)
+    mp, mc = statistics.median(par), statistics.median(chg)
+    ratio = mc / mp if mp else float("nan")
+    row = {"metric": m["name"], "unit": m["unit"], "better": m["better"],
+           "parent_median": mp, "change_median": mc, "parent_spread": spread(par),
+           "median_gap": abs(mc - mp), "wins": wins, "ties": ties,
+           "losses": len(par) - wins - ties, "pairs": len(par), "ratio": ratio}
+    if "bound" in m and mp:
+        worse = (ratio - 1.0) if lower else (1.0 - ratio)
+        row.update(bound=m["bound"], worse_by=worse, within_bound=worse <= m["bound"])
+    return row
+
+
 def report(spec_metrics, pairs):
-    rows = []
-    for m in spec_metrics:
-        name, lower = m["name"], m["better"] == "lower"
-        ok = [(p, c) for p, c in pairs if p is not None and c is not None]
-        par = [p["metrics"][name]["value"] for p, _ in ok]
-        chg = [c["metrics"][name]["value"] for _, c in ok]
-        if not ok:
-            continue
-        wins = sum(1 for a, b in zip(par, chg) if (b < a if lower else b > a))
-        ties = sum(1 for a, b in zip(par, chg) if a == b)
-        mp, mc = statistics.median(par), statistics.median(chg)
-        ratio = mc / mp if mp else float("nan")
-        row = {"metric": name, "unit": m["unit"], "better": m["better"],
-               "parent_median": mp, "change_median": mc, "parent_spread": spread(par),
-               "median_gap": abs(mc - mp), "wins": wins, "ties": ties,
-               "losses": len(ok) - wins - ties, "pairs": len(ok), "ratio": ratio}
-        if "bound" in m and mp:
-            worse = (ratio - 1.0) if lower else (1.0 - ratio)
-            row.update(bound=m["bound"], worse_by=worse, within_bound=worse <= m["bound"])
-        rows.append(row)
-    return rows
+    ok = [(p, c) for p, c in pairs if p is not None and c is not None]
+    if not ok:
+        return []
+    return [compare(m, [p["metrics"][m["name"]]["value"] for p, _ in ok],
+                    [c["metrics"][m["name"]]["value"] for _, c in ok]) for m in spec_metrics]
+
+
+def load_report(runs):
+    """star_etl's initial load (run.json `initial_load_s`, part of `setup_s`)
+    over the pairs where both sides recorded it, so a `setup_s` change can be
+    split into the load and the rest; None for workloads without it."""
+    by_seed = {}
+    for r in runs:
+        if r.get("initial_load_s") is not None:
+            by_seed.setdefault(r["seed"], {})[r["side"]] = r["initial_load_s"]
+    both = [v for v in by_seed.values() if len(v) == 2]
+    if not both:
+        return None
+    return compare({"name": "initial_load_s", "unit": "s", "better": "lower"},
+                   [v["parent"] for v in both], [v["change"] for v in both])
 
 
 def main():
@@ -135,8 +159,10 @@ def main():
         got = {}
         for side, checkout in order:
             got[side] = run_once(checkout, a.workload, seed, a.seconds, a.trace)
-            op_ms = op_latencies(checkout, a.workload, a.trace) if got[side] else {}
-            runs.append({"seed": seed, "side": side, "result": got[side], "op_ms": op_ms})
+            record = run_record(checkout, a.workload, a.trace) if got[side] else {}
+            runs.append({"seed": seed, "side": side, "result": got[side],
+                         "op_ms": op_latencies(record),
+                         "initial_load_s": record.get("initial_load_s")})
             r = got[side]
             summary = "FAILED RUN" if r is None else " ".join(
                 f"{m['name']}={r['metrics'][m['name']]['value']:.4g}" for m in spec_metrics[:5])
@@ -152,6 +178,7 @@ def main():
                 "failed": failed, "failed_share": failed / attempted if attempted else None}
 
     rows = report(spec_metrics, pairs)
+    load = load_report(runs)
     correctness = {"parent": fail_share("parent"), "change": fail_share("change")}
     print(f"{a.workload}, seeds {a.seeds}, --seconds {a.seconds:g} --trace {a.trace}")
     for side, c in correctness.items():
@@ -159,7 +186,12 @@ def main():
               f"{c['failed']}/{c['attempted']} operations failed")
     print(f"{'metric':34} {'parent':>12} {'change':>12} {'ratio':>7} {'P spread':>10} "
           f"{'gap':>10} {'W/T/L':>8}  bound")
+    shown = []
     for r in rows:
+        shown.append(r)
+        if r["metric"] == "setup_s" and load is not None:
+            shown.append(dict(load, metric="  initial_load_s (run.json)"))
+    for r in shown:
         wtl = f"{r['wins']}/{r['ties']}/{r['losses']}"
         bound = ""
         if "bound" in r:
@@ -180,7 +212,7 @@ def main():
         with open(a.json, "w") as f:
             json.dump({"workload": a.workload, "seeds": a.seeds, "seconds": a.seconds,
                        "trace": a.trace, "runs": runs, "correctness": correctness,
-                       "report": rows, "operations": ops}, f, indent=1)
+                       "report": rows, "initial_load": load, "operations": ops}, f, indent=1)
 
 
 if __name__ == "__main__":
