@@ -33,78 +33,101 @@ object Windows {
   def denseIdsGlobal(df: DataFrame, order: Seq[Column], outCol: String): DataFrame =
     df.withColumn(outCol, row_number().over(Window.orderBy(order: _*)).cast(LongType))
 
-  /** Scale-safe dense surrogate keys 1..N: range-partition by the order
-    * columns, sort within partitions, then assign ids as
-    * (per-partition exclusive offset + local index). No single-partition
-    * bottleneck — the 100 TB version of W2. Deterministic when `order`
-    * is a total order (include a unique tie-break key).
-    *
-    * Pure DataFrame form, ONE corpus exchange (round 7): the earlier
-    * `rdd.zipWithIndex` variant left Catalyst and paid an
-    * InternalRow↔Row round trip; the first Dataset rewrite used a
-    * per-bucket window for the local rank, but Catalyst cannot know
-    * spark_partition_id rows are already co-located, so WindowExec
-    * inserted a SECOND corpus-wide hash exchange + sort (seen in the
-    * formatted plan). Here the local index comes from
-    * `monotonically_increasing_id` — (partitionId << 33 | rowIndex),
-    * assigned map-side in the post-sort iteration order, so
-    * `mid & (2^33-1)` IS the within-bucket rank with zero extra
-    * exchanges. Bucket counts fold to a #partitions-row frame whose
-    * exclusive prefix is a trivially-small window, broadcast back. The
-    * id expression is order-sensitive but the upstream sort fixes the
-    * order, and range-boundary sampling is seeded deterministically, so
-    * ids are reproducible (oracle-checked by q41 at both scales).
+  /** Scale-safe dense surrogate keys 1..N: the 100 TB version of W2, with
+    * no single-partition bottleneck. Each row's id is its rank within its
+    * order-range bucket plus the row count of the buckets before it (see
+    * [[twoPhase]]). Deterministic when `order` is a total order (include a
+    * unique tie-break key); oracle-checked by q41.
     */
-  def denseIdsScalable(df: DataFrame, order: Seq[Column], outCol: String): DataFrame = {
-    val bucketed = df.repartitionByRange(order: _*)
-      .sortWithinPartitions(order: _*)
-      .withColumn("__bkt", spark_partition_id())
-      .withColumn("__mid", monotonically_increasing_id())
-    val offsets = bucketed.groupBy(col("__bkt"))
-      .agg(count(lit(1)).as("__cnt"))
-      .withColumn("__off",
-        coalesce(sum(col("__cnt")).over(Window.orderBy(col("__bkt"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("__bkt"), col("__off"))
-    bucketed.join(broadcast(offsets), "__bkt")
-      .withColumn(outCol,
-        (col("__off") + col("__mid").bitwiseAND(lit((1L << 33) - 1)) + 1L).cast(LongType))
-      .drop("__bkt", "__mid", "__off")
-  }
+  def denseIdsScalable(df: DataFrame, order: Seq[Column], outCol: String): DataFrame =
+    twoPhase(df, order, row_number(), count(lit(1)), outCol)
 
   /** Scale-safe GLOBAL running sum (inclusive prefix sum) of `value` over
     * the total order `order` — the 100 TB form of
     * `sum(value) OVER (ORDER BY order)`, whose direct window collapses to a
-    * single partition. Classic two-phase scan: range-partition by the order
-    * columns and sort within partitions; per-partition window cumsum (each
-    * partition sorts only its slice); per-partition totals (one row per
-    * partition) get an exclusive-prefix offset via a WINDOW OVER THE
-    * PARTITION IDS — #partitions rows, trivially single-partition — and a
-    * broadcast join adds the offset back. Deterministic when `order` is a
-    * total order (include a unique tie-break key); sampling-dependent range
-    * boundaries move rows between buckets but never change the result.
+    * single partition. Classic two-phase scan ([[twoPhase]]): a running sum
+    * within each order-range bucket, plus the total of the buckets before
+    * it. Deterministic when `order` is a total order (include a unique
+    * tie-break key): the sampled cut points decide only which bucket a row
+    * falls in, and every read of the input agrees on it.
     */
   def prefixSum(df: DataFrame, order: Seq[Column], value: Column,
-                outCol: String): DataFrame = {
-    // NO sortWithinPartitions here: the per-bucket window below must
-    // hash-redistribute on __bkt anyway (Catalyst cannot know partition
-    // ids are co-located) and sorts its partitions itself — a range-side
-    // sort would be a second corpus sort thrown away at the next
-    // exchange. The range exchange alone defines the buckets.
-    val bucketed = df.repartitionByRange(order: _*)
-      .withColumn("__bkt", spark_partition_id())
-    val local = bucketed.withColumn("__local",
-      sum(value).over(Window.partitionBy(col("__bkt")).orderBy(order: _*)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+                outCol: String): DataFrame =
+    twoPhase(df, order, sum(value), sum(value), outCol)
+
+  /** The two-phase global scan both operators above share: `local` runs
+    * over each bucket of [[withOrderBuckets]] in `order` (ROWS from the
+    * bucket start to the current row), `total` aggregates each bucket, and
+    * a row's result is its `local` plus the exclusive prefix of the
+    * earlier buckets' totals — a window over the bucket ids, #buckets
+    * rows, broadcast back. The per-bucket window is the one corpus
+    * exchange (hash on `__bkt`). */
+  private def twoPhase(df: DataFrame, order: Seq[Column], local: Column,
+                       total: Column, outCol: String): DataFrame = {
+    val bucketed = withOrderBuckets(df, order)
     val offsets = bucketed.groupBy(col("__bkt"))
-      .agg(sum(value).as("__tot"))
+      .agg(total.as("__tot"))
       .withColumn("__off",
         coalesce(sum(col("__tot")).over(Window.orderBy(col("__bkt"))
           .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
       .select(col("__bkt"), col("__off"))
-    local.join(broadcast(offsets), "__bkt")
+    bucketed.withColumn("__local", local.over(Window.partitionBy(col("__bkt"))
+        .orderBy(order: _*).rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .join(broadcast(offsets), "__bkt")
       .withColumn(outCol, col("__local") + col("__off"))
       .drop("__bkt", "__local", "__off")
+  }
+
+  /** `df` plus `__bkt`, a bucket id that is ascending and contiguous in
+    * `order`: bucket i holds the rows after cut point i-1 and up to cut
+    * point i. The cuts come from ONE bounded sample of the order keys
+    * (`spark.sql.execution.rangeExchange.sampleSizePerPartition` keys per
+    * bucket, picked by key hash, sorted and collected on the driver), and
+    * `__bkt` is a deterministic expression of the row — a binary search
+    * over the cuts — so every read of the result buckets a row alike.
+    * (A `repartitionByRange` read twice is two exchanges, each sampling
+    * its input on its own, so they can cut at different keys.) One bucket
+    * per shuffle partition. Order columns keep their direction and NULL
+    * ordering (default ASC NULLS FIRST, DESC NULLS LAST). */
+  private def withOrderBuckets(df: DataFrame, order: Seq[Column]): DataFrame = {
+    val keys = order.map(org.apache.spark.sql.graft.ColumnBridge.sortKey)
+    val names = keys.indices.map(i => s"__k$i")
+    val conf = df.sparkSession.conf
+    val buckets = conf.get("spark.sql.shuffle.partitions").toInt
+    val perBucket = conf.get("spark.sql.execution.rangeExchange.sampleSizePerPartition").toInt
+    val sampled = df.select(keys.zip(names).map { case ((k, _, _), n) => k.as(n) }: _*)
+    val sample = sampled.orderBy(xxhash64(names.map(col): _*)).limit(perBucket * buckets)
+      .orderBy(keys.zip(names).map {
+        case ((_, true, true), n)   => col(n).asc_nulls_first
+        case ((_, true, false), n)  => col(n).asc_nulls_last
+        case ((_, false, true), n)  => col(n).desc_nulls_first
+        case ((_, false, false), n) => col(n).desc_nulls_last
+      }: _*).collect()
+    val cuts =
+      if (sample.isEmpty) Nil
+      else (1 until buckets).map(i => sample(i * sample.length / buckets)).distinct
+    val types = sampled.schema.fields.map(_.dataType)
+    // whether a row sorts strictly after cut `b`, lexicographically from key i
+    def after(b: Row, i: Int = 0): Column =
+      if (i == keys.size) lit(false)
+      else {
+        val (k, asc, nullsFirst) = keys(i)
+        val v = lit(b.get(i)).cast(types(i))
+        val gt =
+          if (b.isNullAt(i)) (if (nullsFirst) k.isNotNull else lit(false))
+          else {
+            val cmp = if (asc) k > v else k < v
+            if (nullsFirst) coalesce(cmp, lit(false)) else k.isNull || cmp
+          }
+        gt || (k <=> v && after(b, i + 1))
+      }
+    def bucket(lo: Int, hi: Int): Column =
+      if (lo == hi) lit(lo)
+      else {
+        val mid = (lo + hi) / 2
+        when(after(cuts(mid)), bucket(mid + 1, hi)).otherwise(bucket(lo, mid))
+      }
+    df.withColumn("__bkt", bucket(0, cuts.size))
   }
 
   /** W3: top-k rows per group by rank with a deterministic tie-break

@@ -62,8 +62,8 @@ object MiscQueries {
 
     // ---- q41: scale-safe dense surrogate keys (ref W2, transform.py:341
     // uses a single-partition global window — q21 keeps that form for
-    // dimension-sized inputs). This is the 100 TB path: range-partition by
-    // the key, sort within partitions, two-phase zipWithIndex offsets — no
+    // dimension-sized inputs). This is the 100 TB path: order-range
+    // buckets, a per-bucket rank, two-phase broadcast offsets — no
     // single-partition bottleneck (graft.operators.Windows.denseIdsScalable).
     Q("q41_dense_ids_scalable",
       Some("""SELECT o_orderkey,

@@ -1456,8 +1456,8 @@ object TextQueries {
     // output is the per-shard manifest a training loader consumes. The
     // global running token sum is the crux at scale: a naive
     // `sum() OVER (ORDER BY doc_id)` collapses to one partition, so the
-    // engine uses Windows.prefixSum — range-partition + per-partition
-    // cumsum + a #partitions-row offset window + broadcast offsets (the
+    // engine uses Windows.prefixSum — order-range buckets + per-bucket
+    // cumsum + a #buckets-row offset window + broadcast offsets (the
     // q41 two-phase shape for a weighted index). The oracle's plain
     // window is semantically identical; 2048 tokens is the context size.
     Q("q92_seq_packing",

@@ -117,8 +117,8 @@ object WindowQueries {
     // classic trick: key - row_number() over (order by key) is constant
     // exactly within a contiguous run. The global row_number is the
     // scale hazard — a naive window collapses to ONE partition, so this
-    // reuses Windows.denseIdsScalable (q41's two-phase range-partition +
-    // zipWithIndex path); the oracle computes the same values with the
+    // reuses Windows.denseIdsScalable (q41's two-phase order-range
+    // buckets + broadcast offsets); the oracle computes the same values with the
     // plain window. Output is islands-sized (bounded by true
     // fragmentation), never keys-sized.
     Q("q102_sequence_islands",

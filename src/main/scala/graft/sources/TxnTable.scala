@@ -3031,39 +3031,83 @@ object TxnTable {
     throw new CommitConflict(s"gave up after $attempt conflicts at $tableDir")
   }
 
-  /** Row-level MERGE (upsert): rows of `updates` replace current rows
-    * with the same `keyCols` value; unmatched update rows insert. One
-    * atomic commit — copy-on-write, the Delta/Iceberg MERGE strategy,
-    * WITH file-level pruning when the live dirs carry `.stats` sidecars
-    * for `keyCols.head` (written by append/overwrite's `statsCol`):
-    * dirs whose [min, max] key range cannot overlap the update keys are
-    * KEPT in the live set untouched; only overlapping dirs rewrite.
-    * At 100 TB that turns a daily upsert from a full-table rewrite into
-    * a rewrite of the handful of files the keys actually live in.
-    *
-    * Precondition: `updates` must be key-unique on `keyCols` (duplicate
-    * update keys would both insert — the same ambiguity Delta's MERGE
-    * rejects with "multiple source rows matched"); dedup upstream.
-    *
-    * Conflict semantics (round 15): merge is read-modify-write, so it
-    * cannot blind-rebase like append — but a LOGICAL re-check
-    * ([[publishRebasing]], Delta's ConflictChecker re-derived) lets it
-    * land past winners that provably did not touch its read set:
-    * appends whose manifest key stats are disjoint from the update
-    * keys' bounds rebase through without re-running the merge; genuine
-    * overlap, dv/eq changes on rewritten dirs, schema/constraint
-    * winners, and unprovable cases still throw [[CommitConflict]] (the
-    * caller re-reads and retries the whole merge). Readers of prior
-    * versions are unaffected; time travel still sees the pre-merge
-    * rows.
-    */
-  /** Enforce the key-unique-source precondition merge/mergeInto document:
-    * duplicate source key tuples would fan matched target rows out
-    * through the join and commit duplicated data silently. Delta rejects
-    * with "multiple source rows matched"; so do we, BEFORE any staging —
-    * one cheap aggregate over the (small) batch. NULL-containing tuples
-    * are exempt: they never match a target row (SQL join semantics), so
-    * they cannot fan anything out. */
+  // ---- DML: one matched-row planner, two writers ---------------------------
+  // Every DML verb is a MATCH (a key batch, an integral range or a
+  // predicate) handed to a WRITER. [[planDml]] turns the match into the
+  // live dirs that may hold a matched row (manifest-stats pruned), the
+  // [[WinnerAddCheck]] a rebasing publish judges winner-added dirs by, and
+  // the stats column a staged dir records. Two writers then commit it, the
+  // two designs of Delta Lake (Armbrust et al., VLDB 2020):
+  //  - copy-on-write ([[writeCopyOnWrite]]): the touched dirs are read
+  //    through their dvs and equality deletes, rewritten, and replaced by
+  //    one staged dir (none when the rewrite is empty);
+  //  - deletion vectors ([[writeDeletionVectors]]): matched positions go to
+  //    per-dir `dv-*` sidecars, the live set is unchanged, and any new rows
+  //    (an UPDATE's rewritten rows, an upsert's batch) append as one dir.
+  // [[deleteKeysEq]] records the keys themselves (Iceberg equality
+  // deletes). Every writer publishes once at base+1 via [[publishRebasing]],
+  // so txnId replay, [[CommitConflict]] and CDC behave alike for all verbs.
+
+  /** What a DML verb matches. NULL never matches (SQL semantics). */
+  sealed private trait DmlMatch {
+    /** The rows of `df` this match selects. */
+    def rows(df: DataFrame): DataFrame
+  }
+  /** Rows whose `keyCols` tuple appears in `keys`. An `upsert` batch is a
+    * full-row source: it must match the table schema and be key-unique.
+    * Otherwise `keys` holds key columns only, typed as in the table.
+    * `prune = false` plans every live dir. */
+  private final case class ByKeys(keys: DataFrame, keyCols: Seq[String],
+                                  upsert: Boolean, prune: Boolean = true)
+    extends DmlMatch {
+    def rows(df: DataFrame): DataFrame = {
+      import org.apache.spark.sql.functions.broadcast
+      // broadcast: the merge-on-read premise is a small batch against big files
+      df.join(broadcast(keys.select(keyCols.map(keys.col): _*).distinct()),
+        keyCols, "left_semi")
+    }
+  }
+  /** A match that is a row-level condition: `cond` is never NULL. */
+  sealed private trait RowMatch extends DmlMatch {
+    def cond: Column
+    def rows(df: DataFrame): DataFrame = df.filter(cond)
+  }
+  /** Rows whose integral `column` lies in [lo, hi]. */
+  private final case class ByRange(column: String, lo: Long, hi: Long) extends RowMatch {
+    def cond: Column = {
+      import org.apache.spark.sql.functions.{coalesce, col, lit}
+      coalesce(col(column).between(lo, hi), lit(false))
+    }
+  }
+  /** Rows where `predicate` is TRUE. No bounds follow from an opaque
+    * Column, so every live dir is planned. */
+  private final case class ByPredicate(predicate: Column) extends RowMatch {
+    def cond: Column = {
+      import org.apache.spark.sql.functions.{coalesce, lit}
+      coalesce(predicate, lit(false))
+    }
+  }
+
+  /** A planned DML verb: its base snapshot, the live dirs that may hold a
+    * matched row, how a rebasing publish judges winner-added dirs, and the
+    * stats column staged dirs record. */
+  private final class DmlPlan(spark: SparkSession, tableDir: String,
+                              val snap: Snapshot, val touched: Seq[String],
+                              val addCheck: WinnerAddCheck,
+                              val statsCol: Option[String]) {
+    /** The touched dirs read THROUGH dvs and equality deletes, so a
+      * deleted row cannot resurrect; None when nothing is touched. */
+    lazy val read: Option[DataFrame] =
+      if (touched.isEmpty) None else Some(readDirsDV(spark, tableDir, snap, touched))
+  }
+
+  /** Enforce the key-unique-source precondition of the upserts: duplicate
+    * source key tuples would fan matched target rows out through the join
+    * and commit duplicated data silently. Delta rejects with "multiple
+    * source rows matched"; so do we, BEFORE any staging — one cheap
+    * aggregate over the (small) batch. NULL-containing tuples are exempt:
+    * they never match a target row (SQL join semantics), so they cannot
+    * fan anything out. */
   private def requireKeyUnique(source: DataFrame, keyCols: Seq[String],
                                op: String): Unit = {
     import org.apache.spark.sql.functions.{col, count, lit}
@@ -3080,361 +3124,116 @@ object TxnTable {
     }
   }
 
-  def merge(spark: SparkSession, tableDir: String, updates: DataFrame,
-            keyCols: Seq[String], txnId: Option[String] = None): Long = {
+  /** The one DML planner: replay a committed `txnId`, pin the base, check
+    * the match's columns, and plan it ([[DmlPlan]]) for `write`.
+    *  - keys: manifest-stats pruning by the batch keys' [min, max] (ONE
+    *    aggregate over the batch), only for an integral first key — a
+    *    non-integral key's long-cast bounds are not sound (see
+    *    [[isIntegral]]). The bounds double as the proof that a
+    *    winner-added dir holds no matched row. A batch with no non-NULL
+    *    key matches nothing and touches no dir.
+    *  - range: [[pruneLive]] by [lo, hi]; the column is checked against
+    *    the EFFECTIVE schema before pruning, so a bad column throws even
+    *    when no dir overlaps (a pre-evolution dir lacks added columns, so
+    *    no one dir's footer will do). Only a table that records no schema
+    *    checks its read frame.
+    *  - predicate: every live dir, and no winner-added dir is provable. */
+  private def planDml(spark: SparkSession, tableDir: String, verb: String,
+                      m: DmlMatch, txnId: Option[String])(write: DmlPlan => Long): Long = {
     import org.apache.spark.sql.functions.{col, max, min}
-    require(keyCols.nonEmpty, "merge needs key columns")
+    m match {
+      case k: ByKeys => require(k.keyCols.nonEmpty, s"$verb needs key columns")
+      case _         => ()
+    }
     txnId.flatMap(findTxn(tableDir, _)) match {
-      case Some(v) => return v // replayed merge — already committed
+      case Some(v) => return v // replayed — already committed
       case None    =>
     }
-    enforceSchema(updates, tableDir) // upserts cannot drift the schema
-    val base = latestVersion(tableDir)
-      .getOrElse(throw new IllegalStateException(s"no commits at $tableDir"))
-    val snap = snapshot(tableDir, base)
-    // AFTER the base is fixed: the first evaluation of the caller's
-    // update frame happens once the merge's snapshot is pinned (callers
-    // may sequence side effects on it; the conflict test relies on this)
-    requireKeyUnique(updates, keyCols, "merge")
-    val key = keyCols.head
-    // file-level pruning: a dir whose manifest-recorded key range misses
-    // every update key keeps its place in the live set (manifest stats,
-    // not sidecar reads — one fetch plans the rewrite set). Gated on
-    // an integral key — a non-integral key's long-cast bounds are not
-    // sound (see [[isIntegral]]), so such merges rewrite everything.
-    val hasStats = isIntegral(updates, key) &&
-      snap.live.exists(d => snap.stats.get(d).exists(_.exists(_._1 == key)))
-    // the update keys' bounds do double duty: rewrite-set pruning here,
-    // and the winner-added-dir disjointness proof if the publish races
-    val bounds: Option[(Long, Long)] =
-      if (!hasStats) None
-      else {
-        val r = updates.agg(min(col(key).cast("long")), max(col(key).cast("long"))).head()
-        if (r.isNullAt(0)) None else Some((r.getLong(0), r.getLong(1)))
-      }
-    // kept dirs need no binding here: the live set recomputes per
-    // publish attempt as head.live minus `touched` (rebase-safe)
-    val touched = bounds match {
-      case Some((lo, hi)) =>
-        snap.live.filterNot(d =>
-          snap.stats.get(d).flatMap(_.find(_._1 == key)) match {
-            case Some((_, dLo, dHi)) => dHi < lo || dLo > hi // disjoint → keep
-            case _                   => false
-          })
-      case None => snap.live
-    }
-    val current =
-      if (touched.isEmpty) updates.limit(0)
-      else readDirsDV(spark, tableDir, snap, touched) // rewrite THROUGH dvs
-    val merged = current.join(updates.select(keyCols.map(updates.col): _*),
-        keyCols, "left_anti")
-      .unionByName(updates)
-    val staged = stage(merged, tableDir, Some(key).filter(_ => hasStats))
-    publishRebasing(tableDir, snap, "merge", touched.toSet, Seq(staged),
-      touched.toSet,
-      bounds.map { case (lo, hi) => AddsKeyDisjoint(key, lo, hi) }
-        .getOrElse(AddsUnprovable), txnId)
-  }
-
-  /** MERGE / upsert as MERGE-ON-READ (the Delta low-shuffle-merge +
-    * DV shape): instead of rewriting every key-range-overlapping file
-    * ([[merge]]'s copy-on-write anti-join + union), mark the OLD
-    * versions of matched keys dead in per-dir deletion vectors (one
-    * broadcast semi-join per candidate dir, candidates pruned by
-    * manifest key stats) and land the ENTIRE update batch — matched
-    * updates and fresh inserts alike — as ONE appended dir. Write cost
-    * is proportional to the batch (KB of dv + the batch itself), not
-    * to the files the matched keys live in: at 100 TB, upserting 1 000
-    * CDC rows scattered across terabyte files stops being a terabyte
-    * rewrite, which is why Delta ships this as the default merge path.
-    * Result set is IDENTICAL to the CoW form — (current ∖ keys) ∪
-    * updates — with the same contracts: schema-on-write enforced, NULL
-    * keys in the table never match (SQL join semantics), duplicate
-    * keys in the batch all land, one atomic base+1 publish with
-    * [[CommitConflict]] on a taken slot, idempotent under txnId
-    * replay, CDC surfaces matched keys as delete+insert via the
-    * multiset path, compaction MATERIALIZES the dvs away, and the
-    * constraint gate in [[stage]] vets the incoming batch. Positions
-    * are matched on the RAW dir (an already-dv'd row re-matching is
-    * harmless — [[writeDV]]'s union dedups), so a deleted row cannot
-    * resurrect. */
-  def mergeDV(spark: SparkSession, tableDir: String, updates: DataFrame,
-              keyCols: Seq[String], txnId: Option[String] = None): Long = {
-    import org.apache.spark.sql.functions.{col, max, min}
-    require(keyCols.nonEmpty, "merge needs key columns")
-    txnId.flatMap(findTxn(tableDir, _)) match {
-      case Some(v) => return v // replayed merge — already committed
-      case None    =>
-    }
-    enforceSchema(updates, tableDir) // upserts cannot drift the schema
-    val base = latestVersion(tableDir)
-      .getOrElse(throw new IllegalStateException(s"no commits at $tableDir"))
-    val snap = snapshot(tableDir, base)
-    val key = keyCols.head
-    // manifest-stats pruning of the dv CANDIDATE set — same soundness
-    // gate as the CoW merge: integral key only, dirs whose recorded
-    // bounds miss every update key cannot hold a matched row
-    val hasStats = isIntegral(updates, key) &&
-      snap.live.exists(d => snap.stats.get(d).exists(_.exists(_._1 == key)))
-    val bounds: Option[(Long, Long)] =
-      if (!hasStats) None
-      else {
-        val r = updates.agg(min(col(key).cast("long")), max(col(key).cast("long"))).head()
-        if (r.isNullAt(0)) None else Some((r.getLong(0), r.getLong(1)))
-      }
-    val touched =
-      if (hasStats && bounds.isEmpty) Seq.empty[String] // no non-null keys
-      else bounds match {
-        case Some((lo, hi)) =>
-          snap.live.filterNot(d =>
-            snap.stats.get(d).flatMap(_.find(_._1 == key)) match {
-              case Some((_, dLo, dHi)) => dHi < lo || dLo > hi // disjoint
-              case _                   => false
-            })
-        case None => snap.live
-      }
-    val keys = updates.select(keyCols.map(updates.col): _*).distinct()
-    val updated = touched.flatMap(d =>
-      stageDVMatch(spark, tableDir, snap, d, keys, keyCols).map(d -> _)).toMap
-    val staged = stageNonEmpty(updates, tableDir, Some(key).filter(_ => hasStats))
-    publishRebasing(tableDir, snap, "merge", Set.empty, staged.toSeq,
-      touched.toSet,
-      bounds.map { case (lo, hi) => AddsKeyDisjoint(key, lo, hi) }
-        .getOrElse(if (hasStats) AddsIgnored else AddsUnprovable),
-      txnId, dvUpdates = updated)
-  }
-
-  /** One WHEN MATCHED clause of [[mergeInto]] — evaluated in the given
-    * order, FIRST true condition wins (SQL:2003 / Delta MERGE).
-    * Conditions and SET expressions see the TARGET row's columns under
-    * their own names and the source row's non-key columns as
-    * `_src_<name>`. */
-  sealed trait MatchedClause {
-    def cond: org.apache.spark.sql.Column
-  }
-  final case class MatchedUpdate(cond: org.apache.spark.sql.Column,
-                                 set: Map[String, org.apache.spark.sql.Column])
-    extends MatchedClause
-  final case class MatchedDelete(cond: org.apache.spark.sql.Column)
-    extends MatchedClause
-
-  /** Full MERGE INTO (SQL:2003 / Delta MERGE): WHEN MATCHED [AND cond]
-    * THEN UPDATE SET ... | DELETE (any number, evaluated in order,
-    * first true condition wins; a matched row firing no clause keeps
-    * unchanged), WHEN NOT MATCHED [AND cond] THEN INSERT the source
-    * row. [[merge]] is the unconditional-upsert special case; this is
-    * the general DML workhorse — CDC apply with tombstones, SCD
-    * updates, conditional backfills — as ONE atomic copy-on-write
-    * commit with the same manifest-stats rewrite pruning: dirs whose
-    * key bounds are disjoint from the source keys keep their place
-    * untouched (they can hold no matched row, and not-matched
-    * semantics only need the touched dirs for the same reason). The
-    * rewrite is ONE pass over the touched dirs: one full-outer key join,
-    * one filter and one projection whose per-column CASE takes the
-    * matched, not-matched-by-source or insert value by the row's side.
-    *
-    * Conditions/SETs may reference BOTH sides: target columns by name,
-    * source non-key columns as `_src_<name>` (the Delta
-    * `source.x`/`target.x` qualifiers, flattened). SET results cast to
-    * the column's existing type (no schema drift); all SETs of a
-    * clause evaluate against the PRE-IMAGE. NULL keys never match
-    * (SQL join semantics): a NULL-key target row keeps, a NULL-key
-    * source row inserts. Source must be key-unique (Delta's "multiple
-    * source rows matched" rejection — dedup upstream) and match the
-    * table schema exactly. Same base+1 / [[CommitConflict]] /
-    * txnId-idempotency contract as [[merge]]; reads THROUGH dvs, so a
-    * dv'd row cannot resurrect; CDC surfaces the effects as
-    * delete+insert pairs. */
-  /** `whenNotMatchedBySource` (Delta's third clause family, SQL:2023
-    * MERGE): clauses applied to TARGET rows with NO source match —
-    * UPDATE SET / DELETE, first-true-wins, unfired rows keep.
-    * Conditions and SETs see target columns only (there IS no source
-    * row). The full-sync/retention pattern: `MatchedDelete(lit(true))`
-    * by-source turns the merge into "make target = source". NOTE:
-    * by-source clauses can fire on ANY target row, so the key-bounds
-    * rewrite pruning is DISABLED when the list is non-empty (a pruned
-    * dir's rows are all not-matched-by-source by construction — Delta
-    * full-scans for the same reason). */
-  def mergeInto(spark: SparkSession, tableDir: String, source: DataFrame,
-                keyCols: Seq[String],
-                whenMatched: Seq[MatchedClause],
-                insertNotMatched: Boolean = true,
-                insertCond: org.apache.spark.sql.Column =
-                  org.apache.spark.sql.functions.lit(true),
-                txnId: Option[String] = None,
-                whenNotMatchedBySource: Seq[MatchedClause] = Nil): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, max, min, when}
-    require(keyCols.nonEmpty, "mergeInto needs key columns")
-    txnId.flatMap(findTxn(tableDir, _)) match {
-      case Some(v) => return v // replayed merge — already committed
-      case None    =>
-    }
-    enforceSchema(source, tableDir)
-    val base = latestVersion(tableDir)
-      .getOrElse(throw new IllegalStateException(s"no commits at $tableDir"))
-    val snap = snapshot(tableDir, base)
-    // after the base is fixed — see [[merge]]'s evaluation-order note
-    requireKeyUnique(source, keyCols, "mergeInto")
-    val key = keyCols.head
-    // same rewrite pruning as merge: kept dirs are provably key-disjoint
-    // from the source, so they hold no matched row and stay untouched —
-    // UNLESS by-source clauses exist, which can fire on exactly those
-    // rows: then every live dir is touched
-    val hasStats = whenNotMatchedBySource.isEmpty && isIntegral(source, key) &&
-      snap.live.exists(d => snap.stats.get(d).exists(_.exists(_._1 == key)))
-    // source-key bounds serve both rewrite pruning and the rebase-time
-    // winner-added-dir disjointness proof (see [[publishRebasing]])
-    val bounds: Option[(Long, Long)] =
-      if (!hasStats) None
-      else {
-        val r = source.agg(min(col(key).cast("long")), max(col(key).cast("long"))).head()
-        if (r.isNullAt(0)) None else Some((r.getLong(0), r.getLong(1)))
-      }
-    val touched = bounds match {
-      case Some((lo, hi)) =>
-        snap.live.filterNot(d =>
-          snap.stats.get(d).flatMap(_.find(_._1 == key)) match {
-            case Some((_, dLo, dHi)) => dHi < lo || dLo > hi // disjoint → keep
-            case _                   => false
-          })
-      case None => snap.live
-    }
-    val current =
-      if (touched.isEmpty) source.limit(0)
-      else readDirsDV(spark, tableDir, snap, touched) // rewrite THROUGH dvs
-    val tgtCols = current.columns.toSeq
-    val srcRenamed = source.select(
-      keyCols.map(source.col) ++
-        tgtCols.filterNot(keyCols.contains).map(c => source.col(c).as(s"_src_$c")): _*)
-    val joined = current.withColumn("_tgt", lit(true))
-      .join(srcRenamed.withColumn("_src", lit(true)), keyCols.toSeq, "full_outer")
-    val isTgt = col("_tgt").isNotNull
-    val isSrc = col("_src").isNotNull
-    (whenMatched ++ whenNotMatchedBySource).foreach {
-      case MatchedUpdate(_, set) => require(!keyCols.exists(set.contains),
-        "SET on a merge key is not supported — delete + insert instead")
-      case _ => ()
-    }
-    // first-true-condition-wins fold: NULL condition = not fired (SQL).
-    // by-source clauses fold the same way over the NOT-matched target
-    // rows (conditions/SETs see target columns only — a `_src_*`
-    // reference is NULL there, so such a condition simply never fires)
-    def fires(c: org.apache.spark.sql.Column) = coalesce(c, lit(false))
-    def deletes(clauses: Seq[MatchedClause]) = clauses.foldRight(lit(false)) { (cl, rest) =>
-      when(fires(cl.cond), lit(cl.isInstanceOf[MatchedDelete])).otherwise(rest)
-    }
-    def valueIn(clauses: Seq[MatchedClause], c: String) =
-      clauses.foldRight(current.col(c)) { (cl, rest) =>
-        cl match {
-          case MatchedUpdate(cond, set) if set.contains(c) =>
-            when(fires(cond), set(c).cast(current.schema(c).dataType)).otherwise(rest)
-          case other => when(fires(other.cond), current.col(c)).otherwise(rest)
+    val snap = snapshot(tableDir, latestVersion(tableDir)
+      .getOrElse(throw new IllegalStateException(s"no commits at $tableDir")))
+    def plan(touched: Seq[String], check: WinnerAddCheck, statsCol: Option[String]) =
+      new DmlPlan(spark, tableDir, snap, touched, check, statsCol)
+    write(m match {
+      case ByKeys(keys, keyCols, upsert, prune) =>
+        // AFTER the base is pinned: the first evaluation of the caller's
+        // batch happens once the snapshot is fixed (callers may sequence
+        // side effects on it; the conflict test relies on this)
+        if (upsert) {
+          enforceSchema(keys, tableDir) // upserts cannot drift the schema
+          requireKeyUnique(keys, keyCols, verb)
+        } else effectiveSchema(tableDir, snap).foreach { st =>
+          // a mistyped anti-join would silently delete nothing
+          keyCols.foreach { c =>
+            require(st.fieldNames.contains(c), s"no column $c in the table schema")
+            require(st(c).dataType == keys.schema(c).dataType,
+              s"key column $c is ${keys.schema(c).dataType.sql}, table has ${st(c).dataType.sql}")
+          }
         }
-      }
-    // ONE pass over the key join, so it is planned and shuffled once: a
-    // row survives by its own side's rule, and each column is a CASE on
-    // the side, so a clause's condition and SETs are evaluated only on
-    // the rows they can fire for (AND/OR and CASE short-circuit)
-    val keep = (isTgt && isSrc && !deletes(whenMatched)) ||
-      (isTgt && !isSrc && !deletes(whenNotMatchedBySource)) ||
-      (!isTgt && lit(insertNotMatched) && fires(insertCond))
-    val rewritten = joined.filter(keep).select(tgtCols.map(c =>
-      (if (keyCols.contains(c)) col(c) // the coalesced USING-join key
-       else when(isTgt && isSrc, valueIn(whenMatched, c))
-         .when(isTgt, valueIn(whenNotMatchedBySource, c))
-         .otherwise(col(s"_src_$c").cast(current.schema(c).dataType))).as(c)): _*)
-    val staged = stage(rewritten, tableDir, Some(key).filter(_ => hasStats))
-    publishRebasing(tableDir, snap, "merge", touched.toSet, Seq(staged),
-      touched.toSet,
-      bounds.map { case (lo, hi) => AddsKeyDisjoint(key, lo, hi) }
-        .getOrElse(AddsUnprovable), txnId)
+        val key = keyCols.head
+        val hasStats = prune && isIntegral(keys, key) &&
+          snap.live.exists(d => snap.stats.get(d).exists(_.exists(_._1 == key)))
+        val bounds =
+          if (!hasStats) None
+          else {
+            val r = keys.agg(min(col(key).cast("long")), max(col(key).cast("long"))).head()
+            if (r.isNullAt(0)) None else Some((r.getLong(0), r.getLong(1)))
+          }
+        bounds match {
+          case Some((lo, hi)) => plan(pruneLive(snap, key, lo, hi), AddsKeyDisjoint(key, lo, hi), Some(key))
+          case None if hasStats => plan(Nil, AddsIgnored, Some(key)) // only NULL keys
+          case None => plan(snap.live, AddsUnprovable, None)
+        }
+      case ByRange(c, lo, hi) =>
+        val p = plan(pruneLive(snap, c, lo, hi), AddsKeyDisjoint(c, lo, hi), Some(c))
+        effectiveSchema(tableDir, snap).orElse(p.read.map(_.schema)).foreach { st =>
+          require(st.fieldNames.contains(c), s"no column $c")
+          require(isIntegralType(st(c).dataType),
+            s"$verb column $c must be an integral type; use ${verb.replace("Range", "Where")}")
+        }
+        p
+      case ByPredicate(_) => plan(snap.live, AddsUnprovable, None)
+    })
   }
 
-  /** Row-level DELETE of a key range (copy-on-write): removes every row
-    * whose `column` value lies in [lo, hi], as ONE atomic commit, WITH
-    * manifest-stats file pruning — a dir whose recorded [min, max] on
-    * `column` is disjoint from the range is KEPT in the live set
-    * untouched (zero reads, zero writes); only possibly-overlapping
-    * dirs are read back, filtered, and rewritten. A touched dir whose
-    * every row matches simply drops out of the live set (the rewrite is
-    * empty — nothing is staged). At 100 TB this is Delta's DELETE WHERE
-    * on a clustered table: a GDPR purge or retention sweep rewrites the
-    * handful of files the keys live in, not the table. `column` must be
-    * integral (long bounds are only sound there, see [[isIntegral]]);
-    * for arbitrary predicates use [[deleteWhere]].
-    *
-    * NULL semantics match SQL DELETE: a NULL `column` never matches the
-    * range, so such rows are kept. Conflict semantics match [[merge]]:
-    * read-modify-write publishes ONLY at base+1 and throws
-    * [[CommitConflict]] if the slot is taken. Readers of prior versions
-    * are unaffected; [[changes]] surfaces the removed rows as "delete".
-    */
-  def deleteRange(spark: SparkSession, tableDir: String, column: String,
-                  lo: Long, hi: Long, txnId: Option[String] = None): Long = {
-    import org.apache.spark.sql.functions.col
-    txnId.flatMap(findTxn(tableDir, _)) match {
-      case Some(v) => return v // replayed delete — already committed
-      case None    =>
+  /** The copy-on-write writer: `out` (a rewrite of the plan's touched
+    * dirs) lands as one staged dir, none when it is empty, and the touched
+    * dirs drop from live. Kept dirs and their dvs carry through whatever
+    * head the publish lands on. */
+  private def writeCopyOnWrite(tableDir: String, p: DmlPlan, action: String,
+                               txnId: Option[String], out: Option[DataFrame]): Long =
+    publishRebasing(tableDir, p.snap, action, p.touched.toSet,
+      out.flatMap(stageNonEmpty(_, tableDir, p.statsCol)).toSeq, p.touched.toSet,
+      p.addCheck, txnId)
+
+  /** The deletion-vector writer: each touched dir's rows matched by `m`
+    * get their positions recorded in a cumulative dv ([[stageDV]]), and
+    * `appended` lands as one staged dir (none when empty). The live set
+    * keeps every dir. Positions are matched on the RAW dir — an already
+    * dv'd row re-matching is harmless, the dv union dedups. */
+  private def writeDeletionVectors(spark: SparkSession, tableDir: String, p: DmlPlan,
+                                   m: DmlMatch, action: String, txnId: Option[String],
+                                   appended: Option[DataFrame]): Long = {
+    val added = appended.flatMap(stageNonEmpty(_, tableDir, p.statsCol)).toSeq
+    val dvs = p.touched.flatMap(d => stageDV(spark, tableDir, p.snap, d, m).map(d -> _)).toMap
+    publishRebasing(tableDir, p.snap, action, Set.empty, added, p.touched.toSet,
+      p.addCheck, txnId, dvUpdates = dvs)
+  }
+
+  /** DELETE (`set` = None) or UPDATE ... SET of the rows `m` matches,
+    * by copy-on-write or by deletion vectors (`dv`). An update's rewritten
+    * rows are the matched rows through [[applySet]]. */
+  private def dmlRows(spark: SparkSession, tableDir: String, verb: String, m: RowMatch,
+                      set: Option[Map[String, Column]], dv: Boolean,
+                      txnId: Option[String]): Long =
+    planDml(spark, tableDir, verb, m, txnId) { p =>
+      import org.apache.spark.sql.functions.lit
+      val action = if (set.isEmpty) "delete" else "update"
+      if (dv) writeDeletionVectors(spark, tableDir, p, m, action, txnId,
+        for (s <- set; df <- p.read) yield applySet(m.rows(df), lit(true), s))
+      else writeCopyOnWrite(tableDir, p, action, txnId,
+        p.read.map(df => set.fold(df.filter(!m.cond))(applySet(df, m.cond, _))))
     }
-    val base = latestVersion(tableDir)
-      .getOrElse(throw new IllegalStateException(s"no commits at $tableDir"))
-    val snap = snapshot(tableDir, base)
-    // kept: dirs PROVABLY disjoint from [lo, hi] by their manifest
-    // bounds — pruneLive keeps possibly-overlapping dirs, so the
-    // complement is exactly the untouched set
-    val touched = pruneLive(snap, column, lo, hi)
-    if (touched.isEmpty) // nothing can match: a no-op delete commit
-      return publishRebasing(tableDir, snap, "delete", Set.empty, Nil,
-        Set.empty, AddsKeyDisjoint(column, lo, hi), txnId)
-    val df = readDirsDV(spark, tableDir, snap, touched)
-    require(df.columns.contains(column), s"no column $column")
-    require(isIntegral(df, column),
-      s"deleteRange column $column must be an integral type; use deleteWhere")
-    val remaining = df.filter(
-      col(column).isNull || col(column) < lo || col(column) > hi)
-    commitRewrite(tableDir, snap, "delete", touched, remaining, Some(column),
-      txnId, AddsKeyDisjoint(column, lo, hi))
-  }
 
-  /** Row-level DELETE by arbitrary predicate (copy-on-write): removes
-    * every row where `predicate` is TRUE (NULL keeps the row — SQL
-    * DELETE semantics). No bounds can be derived from an opaque
-    * [[org.apache.spark.sql.Column]], so every live dir is rewritten;
-    * range-shaped deletes should use [[deleteRange]] and prune. */
-  def deleteWhere(spark: SparkSession, tableDir: String,
-                  predicate: org.apache.spark.sql.Column,
-                  txnId: Option[String] = None): Long = {
-    import org.apache.spark.sql.functions.{coalesce, lit, not}
-    txnId.flatMap(findTxn(tableDir, _)) match {
-      case Some(v) => return v
-      case None    =>
-    }
-    val base = latestVersion(tableDir)
-      .getOrElse(throw new IllegalStateException(s"no commits at $tableDir"))
-    val snap = snapshot(tableDir, base)
-    if (snap.live.isEmpty) // empty table: a no-op delete commit
-      return publishRebasing(tableDir, snap, "delete", Set.empty, Nil,
-        Set.empty, AddsUnprovable, txnId)
-    val df = readDirsDV(spark, tableDir, snap, snap.live)
-    val remaining = df.filter(not(coalesce(predicate, lit(false))))
-    commitRewrite(tableDir, snap, "delete", snap.live, remaining, None, txnId,
-      AddsUnprovable)
-  }
-
-  /** Row-level UPDATE ... SET as one atomic copy-on-write commit (the
-    * Delta/Iceberg UPDATE): dirs provably disjoint from [lo, hi] by
-    * their manifest bounds are never read or written; overlapping dirs
-    * are rewritten with each `set` expression applied ONLY to matching
-    * rows — cast to the column's existing type, so an UPDATE cannot
-    * drift the schema — and every other row byte-preserved. NULL keys
-    * keep their rows unmodified (SQL UPDATE WHERE semantics). Shares
-    * the base+1 / [[CommitConflict]] contract with merge/delete/
-    * compact; [[changes]] surfaces an update as delete+insert via the
-    * multiset path; time travel still reads pre-update values; staged
-    * stats/bloom re-derive from the written data, so skipping stays
-    * sound even when `set` rewrites the stats key itself. The 100 TB
-    * shape: "repricing a SKU range" rewrites the files the keys live
-    * in, not the table. */
   /** Apply UPDATE ... SET against the PRE-image: the match condition
     * and every RHS evaluate on the ORIGINAL row values in one
     * simultaneous projection (SQL UPDATE semantics) — a SET column may
@@ -3456,31 +3255,248 @@ object TxnTable {
     }: _*)
   }
 
+  /** Stage a CUMULATIVE deletion vector for one live dir: the positions
+    * of the rows `m` matches, unioned with the dir's existing dv (a
+    * manifest carries ONE dv per dir, so each dv supersedes the last).
+    * The read is era-aware — the match references CURRENT column names,
+    * resolved by field id on a renamed/widened table — and positions are
+    * captured pre-projection, from the hidden `_metadata` columns, so they
+    * address the raw file: (data/-relative path, parquet row index),
+    * stable for immutable files and independent of read parallelism. */
+  private def stageDV(spark: SparkSession, tableDir: String, snap: Snapshot,
+                      dir: String, m: DmlMatch): Option[String] = {
+    import org.apache.spark.sql.functions.col
+    val df = readEras(spark, tableDir, snap, Seq(dir), withMeta = true)
+    writeDV(spark, tableDir, snap, dir,
+      m.rows(df).select(col("_era_rel").as("rel"), col("_era_pos").as("pos")))
+  }
+
+  /** Shared dv-sidecar writer: union `matched` (rel, pos) with the
+    * dir's existing dv, dedup, and persist — `None` when nothing is
+    * doomed, the OLD dv name when nothing new matched (no pointless
+    * sidecar churn), a fresh `dv-*` dir otherwise. */
+  private def writeDV(spark: SparkSession, tableDir: String, snap: Snapshot,
+                      dir: String, matched: DataFrame): Option[String] = {
+    val all = snap.dvs.get(dir) match {
+      case Some(old) => matched.unionByName(
+        readDv(spark, Seq(new File(dataDir(tableDir), old).getPath))).distinct()
+      case None => matched
+    }
+    val name = s"dv-${UUID.randomUUID()}"
+    val dest = new File(dataDir(tableDir), name)
+    all.coalesce(1).write.parquet(dest.getPath)
+    val n = Tables.parquetRowCount(dest)
+    val oldN = snap.dvs.get(dir).flatMap(nrowsOf(tableDir, _)).getOrElse(0L)
+    if (n == 0L) { deleteRec(dest); None }
+    else if (n == oldN) { deleteRec(dest); snap.dvs.get(dir) } // nothing new
+    else {
+      Files.write(new File(dest, ".nrows").toPath, n.toString.getBytes("UTF-8"))
+      Some(name)
+    }
+  }
+
+  /** Row-level MERGE (upsert): rows of `updates` replace ALL current rows
+    * with the same `keyCols` value — (current ∖ keys) ∪ updates — and
+    * unmatched update rows insert. On a key-unique table that is
+    * [[mergeInto]] with one unconditional all-column update; on a table
+    * holding a key twice, merge leaves one row where mergeInto updates
+    * both. One atomic copy-on-write commit whose rewrite is pruned by the
+    * `.stats` of
+    * `keyCols.head` (written by append/overwrite's `statsCol`): dirs
+    * whose [min, max] key range cannot overlap the update keys keep
+    * their place in the live set untouched. At 100 TB that turns a daily
+    * upsert from a full-table rewrite into a rewrite of the handful of
+    * files the keys actually live in.
+    *
+    * `updates` must be key-unique on `keyCols` (Delta's "multiple source
+    * rows matched" rejection; dedup upstream). Merge is read-modify-write,
+    * so it cannot blind-rebase like append — but [[publishRebasing]]
+    * (Delta's ConflictChecker re-derived) lets it land past winners that
+    * provably did not touch its read set: appends whose manifest key
+    * stats are disjoint from the update keys' bounds rebase through
+    * without re-running the merge; genuine overlap, dv/eq changes on
+    * rewritten dirs, schema/constraint winners and unprovable cases
+    * throw [[CommitConflict]] (the caller re-reads and retries). Readers
+    * of prior versions are unaffected; time travel still sees the
+    * pre-merge rows. */
+  def merge(spark: SparkSession, tableDir: String, updates: DataFrame,
+            keyCols: Seq[String], txnId: Option[String] = None): Long =
+    planDml(spark, tableDir, "merge", ByKeys(updates, keyCols, upsert = true), txnId) { p =>
+      val keys = updates.select(keyCols.map(updates.col): _*)
+      writeCopyOnWrite(tableDir, p, "merge", txnId, Some(p.read.fold(updates)(
+        _.join(keys, keyCols, "left_anti").unionByName(updates))))
+    }
+
+  /** MERGE / upsert as MERGE-ON-READ (the Delta low-shuffle-merge + DV
+    * shape): instead of rewriting every key-range-overlapping file
+    * ([[merge]]'s copy-on-write), mark the OLD versions of matched keys
+    * dead in per-dir deletion vectors (one broadcast semi-join per
+    * candidate dir, candidates pruned by manifest key stats) and land the
+    * ENTIRE batch — matched updates and fresh inserts alike — as ONE
+    * appended dir. Write cost is proportional to the batch, not to the
+    * files the matched keys live in: at 100 TB, upserting 1 000 CDC rows
+    * scattered across terabyte files stops being a terabyte rewrite,
+    * which is why Delta ships this as the default merge path. The result
+    * is IDENTICAL to the CoW form — (current ∖ keys) ∪ updates — with the
+    * same contracts: schema-on-write enforced, a key-unique batch (a
+    * duplicate-key batch is rejected before staging; NULL-key tuples are
+    * exempt), NULL keys never match, one atomic base+1 publish,
+    * idempotent under txnId replay, CDC surfaces matched keys as
+    * delete+insert, compaction MATERIALIZES the dvs away, and the
+    * constraint gate in [[stage]] vets the incoming batch. */
+  def mergeDV(spark: SparkSession, tableDir: String, updates: DataFrame,
+              keyCols: Seq[String], txnId: Option[String] = None): Long = {
+    val m = ByKeys(updates, keyCols, upsert = true)
+    planDml(spark, tableDir, "mergeDV", m, txnId)(p =>
+      writeDeletionVectors(spark, tableDir, p, m, "merge", txnId, Some(updates)))
+  }
+
+  /** One WHEN MATCHED clause of [[mergeInto]] — evaluated in the given
+    * order, FIRST true condition wins (SQL:2003 / Delta MERGE).
+    * Conditions and SET expressions see the TARGET row's columns under
+    * their own names and the source row's non-key columns as
+    * `_src_<name>`. */
+  sealed trait MatchedClause {
+    def cond: org.apache.spark.sql.Column
+  }
+  final case class MatchedUpdate(cond: org.apache.spark.sql.Column,
+                                 set: Map[String, org.apache.spark.sql.Column])
+    extends MatchedClause
+  final case class MatchedDelete(cond: org.apache.spark.sql.Column)
+    extends MatchedClause
+
+  /** Full MERGE INTO (SQL:2003 / Delta MERGE): WHEN MATCHED [AND cond]
+    * THEN UPDATE SET ... | DELETE (any number, evaluated in order,
+    * first true condition wins; a matched row firing no clause keeps
+    * unchanged), WHEN NOT MATCHED [AND cond] THEN INSERT the source
+    * row, and `whenNotMatchedBySource` (Delta's third clause family,
+    * SQL:2023): UPDATE SET / DELETE clauses, first-true-wins, applied to
+    * TARGET rows with NO source match. On a key-unique table [[merge]] is
+    * the unconditional-upsert special case; this is the general DML
+    * workhorse — CDC apply with tombstones, SCD updates, conditional
+    * backfills, and full sync (`MatchedDelete(lit(true))` by source makes
+    * target = source) — as ONE atomic copy-on-write commit with
+    * [[merge]]'s manifest-stats rewrite pruning: dirs whose key bounds
+    * are disjoint from the source keys hold no matched row and keep their
+    * place. By-source clauses can fire on ANY target row, so pruning is
+    * off when there are any (Delta full-scans for the same reason). The
+    * rewrite is ONE pass over the touched dirs: one full-outer key join,
+    * one filter and one projection whose per-column CASE takes the
+    * matched, not-matched-by-source or insert value by the row's side.
+    *
+    * Matched conditions/SETs may reference BOTH sides: target columns by
+    * name, source non-key columns as `_src_<name>` (the Delta
+    * `source.x`/`target.x` qualifiers, flattened); by-source ones see
+    * target columns only. SET results cast to the column's existing type
+    * (no schema drift); all SETs of a clause evaluate against the
+    * PRE-IMAGE. NULL keys never match (SQL join semantics): a NULL-key
+    * target row keeps, a NULL-key source row inserts. Source must be
+    * key-unique and match the table schema exactly. Same base+1 /
+    * [[CommitConflict]] / txnId-idempotency contract as [[merge]]; reads
+    * THROUGH dvs, so a dv'd row cannot resurrect; CDC surfaces the
+    * effects as delete+insert pairs. */
+  def mergeInto(spark: SparkSession, tableDir: String, source: DataFrame,
+                keyCols: Seq[String],
+                whenMatched: Seq[MatchedClause],
+                insertNotMatched: Boolean = true,
+                insertCond: org.apache.spark.sql.Column =
+                  org.apache.spark.sql.functions.lit(true),
+                txnId: Option[String] = None,
+                whenNotMatchedBySource: Seq[MatchedClause] = Nil): Long = {
+    import org.apache.spark.sql.functions.{coalesce, col, lit, when}
+    (whenMatched ++ whenNotMatchedBySource).foreach {
+      case MatchedUpdate(_, set) => require(!keyCols.exists(set.contains),
+        "SET on a merge key is not supported — delete + insert instead")
+      case _ => ()
+    }
+    val m = ByKeys(source, keyCols, upsert = true, prune = whenNotMatchedBySource.isEmpty)
+    planDml(spark, tableDir, "mergeInto", m, txnId) { p =>
+      val current = p.read.getOrElse(source.limit(0))
+      val tgtCols = current.columns.toSeq
+      val srcRenamed = source.select(
+        keyCols.map(source.col) ++
+          tgtCols.filterNot(keyCols.contains).map(c => source.col(c).as(s"_src_$c")): _*)
+      val joined = current.withColumn("_tgt", lit(true))
+        .join(srcRenamed.withColumn("_src", lit(true)), keyCols.toSeq, "full_outer")
+      val isTgt = col("_tgt").isNotNull
+      val isSrc = col("_src").isNotNull
+      // first-true-condition-wins fold: NULL condition = not fired (SQL).
+      // by-source clauses fold the same way over the NOT-matched target
+      // rows (a `_src_*` reference is NULL there, so such a condition
+      // simply never fires)
+      def fires(c: org.apache.spark.sql.Column) = coalesce(c, lit(false))
+      def deletes(clauses: Seq[MatchedClause]) = clauses.foldRight(lit(false)) { (cl, rest) =>
+        when(fires(cl.cond), lit(cl.isInstanceOf[MatchedDelete])).otherwise(rest)
+      }
+      def valueIn(clauses: Seq[MatchedClause], c: String) =
+        clauses.foldRight(current.col(c)) { (cl, rest) =>
+          cl match {
+            case MatchedUpdate(cond, set) if set.contains(c) =>
+              when(fires(cond), set(c).cast(current.schema(c).dataType)).otherwise(rest)
+            case other => when(fires(other.cond), current.col(c)).otherwise(rest)
+          }
+        }
+      // ONE pass over the key join, so it is planned and shuffled once: a
+      // row survives by its own side's rule, and each column is a CASE on
+      // the side, so a clause's condition and SETs are evaluated only on
+      // the rows they can fire for (AND/OR and CASE short-circuit)
+      val keep = (isTgt && isSrc && !deletes(whenMatched)) ||
+        (isTgt && !isSrc && !deletes(whenNotMatchedBySource)) ||
+        (!isTgt && lit(insertNotMatched) && fires(insertCond))
+      val rewritten = joined.filter(keep).select(tgtCols.map(c =>
+        (if (keyCols.contains(c)) col(c) // the coalesced USING-join key
+         else when(isTgt && isSrc, valueIn(whenMatched, c))
+           .when(isTgt, valueIn(whenNotMatchedBySource, c))
+           .otherwise(col(s"_src_$c").cast(current.schema(c).dataType))).as(c)): _*)
+      writeCopyOnWrite(tableDir, p, "merge", txnId, Some(rewritten))
+    }
+  }
+
+  /** Row-level DELETE of a key range (copy-on-write): removes every row
+    * whose `column` value lies in [lo, hi], as ONE atomic commit, WITH
+    * manifest-stats file pruning — a dir whose recorded [min, max] on
+    * `column` is disjoint from the range is KEPT in the live set
+    * untouched (zero reads, zero writes); only possibly-overlapping
+    * dirs are read back, filtered, and rewritten. A touched dir whose
+    * every row matches simply drops out of the live set. At 100 TB this
+    * is Delta's DELETE WHERE on a clustered table: a GDPR purge or
+    * retention sweep rewrites the handful of files the keys live in, not
+    * the table. `column` must be integral in the table schema (long
+    * bounds are only sound there, see [[isIntegral]]) — checked even when
+    * no dir overlaps; for arbitrary predicates use [[deleteWhere]]. NULL
+    * never matches the range (SQL DELETE). Conflict semantics match
+    * [[merge]]; [[changes]] surfaces the removed rows as "delete". */
+  def deleteRange(spark: SparkSession, tableDir: String, column: String,
+                  lo: Long, hi: Long, txnId: Option[String] = None): Long =
+    dmlRows(spark, tableDir, "deleteRange", ByRange(column, lo, hi), None, dv = false, txnId)
+
+  /** Row-level DELETE by arbitrary predicate (copy-on-write): removes
+    * every row where `predicate` is TRUE (NULL keeps the row — SQL
+    * DELETE semantics). No bounds can be derived from an opaque
+    * [[org.apache.spark.sql.Column]], so every live dir is rewritten;
+    * range-shaped deletes should use [[deleteRange]] and prune. */
+  def deleteWhere(spark: SparkSession, tableDir: String,
+                  predicate: org.apache.spark.sql.Column,
+                  txnId: Option[String] = None): Long =
+    dmlRows(spark, tableDir, "deleteWhere", ByPredicate(predicate), None, dv = false, txnId)
+
+  /** Row-level UPDATE ... SET as one atomic copy-on-write commit (the
+    * Delta/Iceberg UPDATE): dirs provably disjoint from [lo, hi] by
+    * their manifest bounds are never read or written; overlapping dirs
+    * are rewritten with each `set` expression applied ONLY to matching
+    * rows ([[applySet]]: against the pre-image, cast to the column's
+    * existing type) and every other row byte-preserved. NULL keys keep
+    * their rows unmodified (SQL UPDATE WHERE semantics). `column` is
+    * checked as in [[deleteRange]]. Shares the base+1 /
+    * [[CommitConflict]] contract with merge/delete/compact; [[changes]]
+    * surfaces an update as delete+insert; time travel still reads
+    * pre-update values; staged stats re-derive from the written data,
+    * so skipping stays sound even when `set` rewrites the stats key. */
   def updateRange(spark: SparkSession, tableDir: String, column: String,
                   lo: Long, hi: Long,
                   set: Map[String, org.apache.spark.sql.Column],
-                  txnId: Option[String] = None): Long = {
-    import org.apache.spark.sql.functions.col
-    txnId.flatMap(findTxn(tableDir, _)) match {
-      case Some(v) => return v // replayed update — already committed
-      case None    =>
-    }
-    val base = latestVersion(tableDir)
-      .getOrElse(throw new IllegalStateException(s"no commits at $tableDir"))
-    val snap = snapshot(tableDir, base)
-    val touched = pruneLive(snap, column, lo, hi)
-    if (touched.isEmpty) // provably no row can match: metadata-only commit
-      return publishRebasing(tableDir, snap, "update", Set.empty, Nil,
-        Set.empty, AddsKeyDisjoint(column, lo, hi), txnId)
-    val df = readDirsDV(spark, tableDir, snap, touched)
-    require(df.columns.contains(column), s"no column $column")
-    require(isIntegral(df, column),
-      s"updateRange column $column must be an integral type; use updateWhere")
-    val cond = col(column).isNotNull && col(column) >= lo && col(column) <= hi
-    val rewritten = applySet(df, cond, set)
-    commitRewrite(tableDir, snap, "update", touched, rewritten, Some(column),
-      txnId, AddsKeyDisjoint(column, lo, hi))
-  }
+                  txnId: Option[String] = None): Long =
+    dmlRows(spark, tableDir, "updateRange", ByRange(column, lo, hi), Some(set), dv = false, txnId)
 
   /** Predicate form of [[updateRange]]: no bounds can be proven from an
     * opaque Column, so every live dir is rewritten (into one packed
@@ -3489,22 +3505,108 @@ object TxnTable {
   def updateWhere(spark: SparkSession, tableDir: String,
                   predicate: org.apache.spark.sql.Column,
                   set: Map[String, org.apache.spark.sql.Column],
-                  txnId: Option[String] = None): Long = {
-    import org.apache.spark.sql.functions.{coalesce, lit}
-    txnId.flatMap(findTxn(tableDir, _)) match {
-      case Some(v) => return v
-      case None    =>
+                  txnId: Option[String] = None): Long =
+    dmlRows(spark, tableDir, "updateWhere", ByPredicate(predicate), Some(set), dv = false, txnId)
+
+  /** Row-level DELETE as a MERGE-ON-READ deletion vector (Delta DVs /
+    * Iceberg positional deletes): instead of rewriting every file the
+    * range touches ([[deleteRange]]'s copy-on-write), record the doomed
+    * ROW POSITIONS in per-dir `dv-*` sidecars and publish a manifest
+    * whose LIVE SET IS UNCHANGED — readers drop the positions at scan
+    * time ([[readDirsDV]]). Write cost is one scan of the
+    * bounds-overlapping dirs plus a KB-sized dv write; at 100 TB a
+    * 100-row GDPR purge stops being a terabyte rewrite. The read-side
+    * rent accrues until a [[compact]]/[[compactClustered]] rewrite
+    * MATERIALIZES the dvs. Manifest-stats pruning stays sound: dv'd
+    * bounds are a superset of effective content. NULL keys keep their
+    * rows (SQL DELETE); same base+1 / [[CommitConflict]] contract and
+    * column check as the CoW form; [[changes]] surfaces dv'd rows as
+    * "delete"; time travel still reads pre-delete snapshots. */
+  def deleteRangeDV(spark: SparkSession, tableDir: String, column: String,
+                    lo: Long, hi: Long, txnId: Option[String] = None): Long =
+    dmlRows(spark, tableDir, "deleteRangeDV", ByRange(column, lo, hi), None, dv = true, txnId)
+
+  /** Predicate form of [[deleteRangeDV]]: every live dir is scanned for
+    * matching positions (no bounds from an opaque Column), but NO data
+    * is rewritten — dirs with matches gain a dv, the rest are untouched
+    * (and keep any existing dv). NULL predicate keeps the row. */
+  def deleteWhereDV(spark: SparkSession, tableDir: String,
+                    predicate: org.apache.spark.sql.Column,
+                    txnId: Option[String] = None): Long =
+    dmlRows(spark, tableDir, "deleteWhereDV", ByPredicate(predicate), None, dv = true, txnId)
+
+  /** Row-level UPDATE as MERGE-ON-READ (the Delta DV-update shape):
+    * instead of rewriting every bounds-overlapping file
+    * ([[updateRange]]'s copy-on-write), mark the matched ROW POSITIONS
+    * dead in per-dir deletion vectors and APPEND one new dir holding
+    * the rewritten matched rows — so the write cost is proportional to
+    * the rows changed, not to the files they happen to live in. At
+    * 100 TB, repricing 100 rows scattered across terabyte files stops
+    * being a terabyte rewrite. Semantics are identical to the CoW form
+    * and SQL UPDATE ([[applySet]]), and matched rows are read THROUGH
+    * existing dvs so an already-deleted row cannot resurrect into the
+    * rewrite. One atomic base+1 commit (same [[CommitConflict]]
+    * contract); CDC surfaces the update as delete+insert; compaction
+    * later MATERIALIZES the dvs away. Dirs provably disjoint from the
+    * range are never even scanned. */
+  def updateRangeDV(spark: SparkSession, tableDir: String, column: String,
+                    lo: Long, hi: Long,
+                    set: Map[String, org.apache.spark.sql.Column],
+                    txnId: Option[String] = None): Long =
+    dmlRows(spark, tableDir, "updateRangeDV", ByRange(column, lo, hi), Some(set), dv = true, txnId)
+
+  /** Predicate form of [[updateRangeDV]]: no bounds can be proven from
+    * an opaque Column, so every live dir is SCANNED for matching
+    * positions — but no data is rewritten except the matched rows
+    * themselves, which land as one appended dir. NULL predicate keeps
+    * the row unmodified (SQL UPDATE WHERE). */
+  def updateWhereDV(spark: SparkSession, tableDir: String,
+                    predicate: org.apache.spark.sql.Column,
+                    set: Map[String, org.apache.spark.sql.Column],
+                    txnId: Option[String] = None): Long =
+    dmlRows(spark, tableDir, "updateWhereDV", ByPredicate(predicate), Some(set), dv = true, txnId)
+
+  /** EQUALITY delete (Iceberg's second delete flavor, completing the
+    * taxonomy: copy-on-write [[deleteRange]]/[[deleteWhere]], positional
+    * merge-on-read [[deleteRangeDV]], and this): delete every row whose
+    * key tuple appears in `keys`, WITHOUT SCANNING THE TABLE AT ALL —
+    * the key set lands as an `eq-*` dir and the manifest's `eqs` map
+    * records which live dirs it applies to (the planner's touched dirs,
+    * stats-pruned by the first key's bounds when provable), so the write
+    * costs O(|keys|) regardless of table size: the shape a high-rate CDC
+    * tombstone stream needs at 100 TB. The rent moves to read time:
+    * applied dirs anti-join the broadcast KB-sized key set at scan.
+    * Sequencing is manifest-scoped, exactly Iceberg's sequence-number
+    * rule: the delete applies only to dirs live at its commit — a LATER
+    * append of the same key is visible, not retro-deleted. Copy-on-write
+    * rewrites and compaction read THROUGH eq deletes and
+    * [[tryPublish]]'s inherit-and-filter drops entries whose applied
+    * dirs left the live set. NULL keys never match (SQL). Key columns
+    * must exist in the table schema with matching types. Same base+1 /
+    * [[CommitConflict]] / txnId contract as every writer; the applies-set
+    * is the op's read set (a winner that rewrote one of those dirs would
+    * carry the doomed rows out of its reach, so the rebase check pins
+    * them); [[vacuum]] keeps referenced eq dirs; [[cloneTable]] carries
+    * them as references. */
+  def deleteKeysEq(spark: SparkSession, tableDir: String, keys: DataFrame,
+                   txnId: Option[String] = None): Long = {
+    val keyCols = keys.columns.toSeq
+    planDml(spark, tableDir, "deleteKeysEq", ByKeys(keys, keyCols, upsert = false), txnId) { p =>
+      // the key set is DELETE metadata, not table data: written directly
+      // (no constraint gate — a delete cannot violate a CHECK, and the
+      // key projection may not even resolve the constraint's columns)
+      val eqAdd = if (p.touched.isEmpty) None else {
+        val eqName = s"eq-${UUID.randomUUID()}"
+        val dest = new File(dataDir(tableDir), eqName)
+        keys.select(keyCols.map(keys.col): _*).distinct().coalesce(1)
+          .write.parquet(dest.getPath)
+        val n = Tables.parquetRowCount(dest)
+        Files.write(new File(dest, ".nrows").toPath, n.toString.getBytes("UTF-8"))
+        Some(eqName -> ((keyCols, p.touched)))
+      }
+      publishRebasing(tableDir, p.snap, "delete", Set.empty, Nil, p.touched.toSet,
+        p.addCheck, txnId, eqAdd = eqAdd)
     }
-    val base = latestVersion(tableDir)
-      .getOrElse(throw new IllegalStateException(s"no commits at $tableDir"))
-    val snap = snapshot(tableDir, base)
-    if (snap.live.isEmpty) // empty table: a no-op update commit
-      return publishRebasing(tableDir, snap, "update", Set.empty, Nil,
-        Set.empty, AddsUnprovable, txnId)
-    val df = readDirsDV(spark, tableDir, snap, snap.live)
-    val rewritten = applySet(df, coalesce(predicate, lit(false)), set)
-    commitRewrite(tableDir, snap, "update", snap.live, rewritten, None, txnId,
-      AddsUnprovable)
   }
 
   /** Metadata-only ADD COLUMN (Delta/Iceberg schema evolution): the new
@@ -3954,328 +4056,6 @@ object TxnTable {
         s"concurrent commit at version ${base + 1}; re-read and retry")
     maybeCheckpoint(tableDir, base + 1L)
     base + 1L
-  }
-
-  /** Shared tail of the copy-on-write writers: stage `remaining` (skip
-    * the dir entirely when the rewrite is empty — a fully-deleted file
-    * just leaves the live set), publish at base+1 or throw. `dvs`
-    * carries surviving kept-dir deletion vectors forward (tryPublish
-    * drops entries for rewritten dirs automatically). */
-  /** Stage-and-publish tail shared by the copy-on-write DELETE/UPDATE
-    * forms: `removed` dirs (the op's read-and-rewritten set) drop from
-    * live, `remaining` lands as one staged dir (none when it is empty),
-    * and the publish rebases past provably-disjoint winners
-    * ([[publishRebasing]]). Kept dirs and their dvs carry through
-    * whatever head the publish lands on. */
-  private def commitRewrite(tableDir: String, snap: Snapshot, action: String,
-                            removed: Seq[String], remaining: DataFrame,
-                            statsCol: Option[String],
-                            txnId: Option[String],
-                            addCheck: WinnerAddCheck): Long = {
-    val added = stageNonEmpty(remaining, tableDir, statsCol).toSeq
-    publishRebasing(tableDir, snap, action, removed.toSet, added,
-      removed.toSet, addCheck, txnId)
-  }
-
-  /** Stage a CUMULATIVE deletion vector for one live dir: the positions
-    * of `pred`-matching rows, unioned with the dir's existing dv (a
-    * manifest carries ONE dv per dir, so each dv supersedes the last).
-    * Returns None when nothing is deleted, the prior dv's name when the
-    * predicate matched nothing new (no redundant dv dir), or a fresh
-    * `dv-*` dir name. Positions are (data/-relative path, parquet row
-    * index) from the hidden `_metadata` columns — stable for immutable
-    * files, independent of read parallelism. */
-  private def stageDV(spark: SparkSession, tableDir: String, snap: Snapshot,
-                      dir: String,
-                      pred: DataFrame => org.apache.spark.sql.Column): Option[String] = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit}
-    // era-aware read: the predicate references CURRENT column names —
-    // on a renamed/widened table the projection resolves them by field
-    // id against the dir's physical columns; positions are captured
-    // pre-projection so they still address the raw file
-    val df = readEras(spark, tableDir, snap, Seq(dir), withMeta = true)
-    val matched = df.filter(coalesce(pred(df), lit(false)))
-      .select(col("_era_rel").as("rel"), col("_era_pos").as("pos"))
-    writeDV(spark, tableDir, snap, dir, matched)
-  }
-
-  /** [[stageDV]] for key-MEMBERSHIP predicates ([[mergeDV]]): the
-    * matched positions are the dir's rows whose key tuple appears in
-    * `keys` — a BROADCAST left-semi join (the MoR premise is a small
-    * update batch against big files; NULL keys never match, SQL join
-    * semantics), with the hidden `_metadata` columns projected BEFORE
-    * the join so positions survive it. */
-  private def stageDVMatch(spark: SparkSession, tableDir: String, snap: Snapshot,
-                           dir: String, keys: DataFrame,
-                           keyCols: Seq[String]): Option[String] = {
-    import org.apache.spark.sql.functions.{broadcast, col}
-    val matched = readEras(spark, tableDir, snap, Seq(dir), withMeta = true)
-      .withColumnRenamed("_era_rel", "rel").withColumnRenamed("_era_pos", "pos")
-      .join(broadcast(keys), keyCols, "left_semi")
-      .select(col("rel"), col("pos"))
-    writeDV(spark, tableDir, snap, dir, matched)
-  }
-
-  /** Shared dv-sidecar writer: union `matched` (rel, pos) with the
-    * dir's existing dv, dedup, and persist — `None` when nothing is
-    * doomed, the OLD dv name when nothing new matched (no pointless
-    * sidecar churn), a fresh `dv-*` dir otherwise. */
-  private def writeDV(spark: SparkSession, tableDir: String, snap: Snapshot,
-                      dir: String, matched: DataFrame): Option[String] = {
-    val all = snap.dvs.get(dir) match {
-      case Some(old) => matched.unionByName(
-        readDv(spark, Seq(new File(dataDir(tableDir), old).getPath))).distinct()
-      case None => matched
-    }
-    val name = s"dv-${UUID.randomUUID()}"
-    val dest = new File(dataDir(tableDir), name)
-    all.coalesce(1).write.parquet(dest.getPath)
-    val n = Tables.parquetRowCount(dest)
-    val oldN = snap.dvs.get(dir).flatMap(nrowsOf(tableDir, _)).getOrElse(0L)
-    if (n == 0L) { deleteRec(dest); None }
-    else if (n == oldN) { deleteRec(dest); snap.dvs.get(dir) } // nothing new
-    else {
-      Files.write(new File(dest, ".nrows").toPath, n.toString.getBytes("UTF-8"))
-      Some(name)
-    }
-  }
-
-  /** Row-level DELETE as a MERGE-ON-READ deletion vector (Delta DVs /
-    * Iceberg positional deletes): instead of rewriting every file the
-    * range touches ([[deleteRange]]'s copy-on-write), record the doomed
-    * ROW POSITIONS in per-dir `dv-*` sidecars and publish a manifest
-    * whose LIVE SET IS UNCHANGED — readers anti-join the positions away
-    * at scan time ([[readDirsDV]]). Write cost is one scan of the
-    * bounds-overlapping dirs plus a KB-sized dv write; at 100 TB a
-    * 100-row GDPR purge stops being a terabyte rewrite. The read-side
-    * rent (hidden-metadata projection + broadcast anti-join on dv'd
-    * dirs) accrues until a [[compact]]/[[compactClustered]] rewrite
-    * MATERIALIZES the dvs (they read through [[read]], so packed dirs
-    * are dv-free). Manifest-stats pruning stays sound: dv'd bounds are
-    * a superset of effective content. NULL keys keep their rows (SQL
-    * DELETE); same base+1 / [[CommitConflict]] contract as the CoW
-    * form; [[changes]] surfaces dv'd rows as "delete" via the multiset
-    * path; time travel still reads pre-delete snapshots. */
-  def deleteRangeDV(spark: SparkSession, tableDir: String, column: String,
-                    lo: Long, hi: Long, txnId: Option[String] = None): Long = {
-    import org.apache.spark.sql.functions.{col, lit}
-    txnId.flatMap(findTxn(tableDir, _)) match {
-      case Some(v) => return v // replayed delete — already committed
-      case None    =>
-    }
-    val base = latestVersion(tableDir)
-      .getOrElse(throw new IllegalStateException(s"no commits at $tableDir"))
-    val snap = snapshot(tableDir, base)
-    val touched = pruneLive(snap, column, lo, hi) // only these can match
-    // validate against the snapshot's EFFECTIVE schema, not one dir's raw
-    // footer: a pre-evolution dir lacks added columns, and a head-dir-only
-    // check would both reject legitimate deletes on added columns and
-    // skip validating the remaining dirs
-    effectiveSchema(tableDir, snap).foreach { st =>
-      require(st.fieldNames.contains(column), s"no column $column")
-      require(isIntegralType(st(column).dataType),
-        s"deleteRangeDV column $column must be an integral type; use deleteWhereDV")
-    }
-    val updated = touched.flatMap { d =>
-      stageDV(spark, tableDir, snap, d,
-        df => df.col(column) >= lit(lo) && df.col(column) <= lit(hi)).map(d -> _)
-    }.toMap
-    publishRebasing(tableDir, snap, "delete", Set.empty, Nil, touched.toSet,
-      AddsKeyDisjoint(column, lo, hi), txnId, dvUpdates = updated)
-  }
-
-  /** Predicate form of [[deleteRangeDV]]: every live dir is scanned for
-    * matching positions (no bounds from an opaque Column), but NO data
-    * is rewritten — dirs with matches gain a dv, the rest are untouched
-    * (and keep any existing dv). NULL predicate keeps the row. */
-  def deleteWhereDV(spark: SparkSession, tableDir: String,
-                    predicate: org.apache.spark.sql.Column,
-                    txnId: Option[String] = None): Long = {
-    txnId.flatMap(findTxn(tableDir, _)) match {
-      case Some(v) => return v
-      case None    =>
-    }
-    val base = latestVersion(tableDir)
-      .getOrElse(throw new IllegalStateException(s"no commits at $tableDir"))
-    val snap = snapshot(tableDir, base)
-    val updated = snap.live.flatMap(d =>
-      stageDV(spark, tableDir, snap, d, _ => predicate).map(d -> _)).toMap
-    publishRebasing(tableDir, snap, "delete", Set.empty, Nil, snap.live.toSet,
-      AddsUnprovable, txnId, dvUpdates = updated)
-  }
-
-  /** EQUALITY delete (Iceberg's second delete flavor, completing the
-    * taxonomy: copy-on-write [[deleteRange]]/[[deleteWhere]], positional
-    * merge-on-read [[deleteRangeDV]], and this): delete every row whose
-    * key tuple appears in `keys`, WITHOUT SCANNING THE TABLE AT ALL —
-    * the key set lands as an `eq-*` dir and the manifest's `eqs` map
-    * records which live dirs it applies to (stats-pruned by the first
-    * key's bounds when provable), so the write costs O(|keys|)
-    * regardless of table size: the cheapest delete that exists, the
-    * shape a high-rate CDC tombstone stream needs at 100 TB (positional
-    * dvs still pay one scan of the overlapping files to FIND positions).
-    * The rent moves to read time: applied dirs anti-join the broadcast
-    * KB-sized key set at scan (grouped so unaffected dirs pay nothing).
-    * Sequencing is manifest-scoped, exactly Iceberg's sequence-number
-    * rule: the delete applies only to dirs live at its commit — a LATER
-    * append of the same key is visible, not retro-deleted. Copy-on-write
-    * rewrites and compaction read THROUGH eq deletes and
-    * [[tryPublish]]'s inherit-and-filter drops entries whose applied
-    * dirs left the live set — materialization is automatic, zero
-    * call-site cooperation. NULL keys never match (SQL). Key columns
-    * must exist in the table schema with matching types. Same base+1 /
-    * [[CommitConflict]] / txnId contract as every writer; CDC surfaces
-    * the deleted rows via the multiset path; time travel still reads
-    * them; [[vacuum]] keeps referenced eq dirs; [[cloneTable]] carries
-    * them as references. */
-  def deleteKeysEq(spark: SparkSession, tableDir: String, keys: DataFrame,
-                   txnId: Option[String] = None): Long = {
-    import org.apache.spark.sql.functions.{col, max, min}
-    txnId.flatMap(findTxn(tableDir, _)) match {
-      case Some(v) => return v // replayed delete — already committed
-      case None    =>
-    }
-    val base = latestVersion(tableDir)
-      .getOrElse(throw new IllegalStateException(s"no commits at $tableDir"))
-    val snap = snapshot(tableDir, base)
-    val keyCols = keys.columns.toSeq
-    require(keyCols.nonEmpty, "equality delete needs key columns")
-    // key columns must exist in the table with identical types — a
-    // mistyped anti-join would silently delete nothing
-    val ddl = snap.schema.orElse {
-      val f = new File(tableDir, "_schema")
-      if (f.exists()) Some(new String(Files.readAllBytes(f.toPath), "UTF-8")) else None
-    }
-    ddl.map(structOf).foreach { st =>
-      keyCols.foreach { c =>
-        require(st.fieldNames.contains(c), s"no column $c in the table schema")
-        require(st(c).dataType == keys.schema(c).dataType,
-          s"key column $c is ${keys.schema(c).dataType.sql}, table has ${st(c).dataType.sql}")
-      }
-    }
-    // applies-to: the live set, stats-pruned by the first key's bounds
-    // when provable — ONE aggregate over the (tiny) key set, zero table
-    // data read
-    val key = keyCols.head
-    val hasStats = isIntegral(keys, key) &&
-      snap.live.exists(d => snap.stats.get(d).exists(_.exists(_._1 == key)))
-    val bounds: Option[(Long, Long)] =
-      if (!hasStats) None
-      else {
-        val r = keys.agg(min(col(key).cast("long")), max(col(key).cast("long"))).head()
-        if (r.isNullAt(0)) None else Some((r.getLong(0), r.getLong(1)))
-      }
-    val applies =
-      if (hasStats && bounds.isEmpty) Seq.empty[String] // no non-null keys
-      else bounds match {
-        case Some((lo, hi)) => pruneLive(snap, key, lo, hi)
-        case None           => snap.live
-      }
-    // the applies-set is the op's logical READ set: an eq delete claims
-    // it covers every dir that may hold a matching key — a winner that
-    // rewrote one of those dirs (compaction) would carry the doomed rows
-    // into a dir the entry does not apply to (a lost delete), so the
-    // rebase check pins them; provable key bounds let the publish ride
-    // past stats-disjoint appends
-    val addCheck = bounds.map { case (lo, hi) => AddsKeyDisjoint(key, lo, hi) }
-      .getOrElse(if (hasStats) AddsIgnored else AddsUnprovable)
-    if (applies.isEmpty) // provably no effect: metadata-only commit
-      return publishRebasing(tableDir, snap, "delete", Set.empty, Nil,
-        Set.empty, addCheck, txnId)
-    // the key set is DELETE metadata, not table data: written directly
-    // (no constraint gate — a delete cannot violate a CHECK, and the
-    // key projection may not even resolve the constraint's columns)
-    val eqName = s"eq-${UUID.randomUUID()}"
-    val dest = new File(dataDir(tableDir), eqName)
-    keys.select(keyCols.map(keys.col): _*).distinct().coalesce(1)
-      .write.parquet(dest.getPath)
-    val n = Tables.parquetRowCount(dest)
-    Files.write(new File(dest, ".nrows").toPath, n.toString.getBytes("UTF-8"))
-    publishRebasing(tableDir, snap, "delete", Set.empty, Nil, applies.toSet,
-      addCheck, txnId, eqAdd = Some(eqName -> ((keyCols, applies))))
-  }
-
-  /** Row-level UPDATE as MERGE-ON-READ (the Delta DV-update shape):
-    * instead of rewriting every bounds-overlapping file
-    * ([[updateRange]]'s copy-on-write), mark the matched ROW POSITIONS
-    * dead in per-dir deletion vectors and APPEND one new dir holding
-    * the rewritten matched rows — so the write cost is proportional to
-    * the rows changed (KB of dv + the matched rows re-staged), not to
-    * the files they happen to live in. At 100 TB, repricing 100 rows
-    * scattered across terabyte files stops being a terabyte rewrite.
-    * Semantics are identical to the CoW form and SQL UPDATE: SET
-    * expressions evaluate against the PRE-IMAGE ([[applySet]] — a SET
-    * that reassigns the predicate column cannot perturb a later SET's
-    * input), results cast to the column's existing type (no schema
-    * drift), NULL keys keep their rows, and matched rows are read
-    * THROUGH existing dvs so an already-deleted row cannot resurrect
-    * into the rewrite. The untouched live set plus one appended dir
-    * publishes as ONE atomic base+1 commit (same [[CommitConflict]]
-    * contract as merge/delete/compact); CDC surfaces the update as
-    * delete+insert via the multiset path; compaction later MATERIALIZES
-    * the dvs away. The rewrite/dv set is pruned by manifest stats —
-    * dirs provably disjoint from the range are never even scanned. */
-  def updateRangeDV(spark: SparkSession, tableDir: String, column: String,
-                    lo: Long, hi: Long,
-                    set: Map[String, org.apache.spark.sql.Column],
-                    txnId: Option[String] = None): Long = {
-    import org.apache.spark.sql.functions.{col, lit}
-    txnId.flatMap(findTxn(tableDir, _)) match {
-      case Some(v) => return v // replayed update — already committed
-      case None    =>
-    }
-    val base = latestVersion(tableDir)
-      .getOrElse(throw new IllegalStateException(s"no commits at $tableDir"))
-    val snap = snapshot(tableDir, base)
-    val touched = pruneLive(snap, column, lo, hi) // only these can match
-    val staged = if (touched.isEmpty) None else {
-      val dfT = readDirsDV(spark, tableDir, snap, touched)
-      require(dfT.columns.contains(column), s"no column $column")
-      require(isIntegral(dfT, column),
-        s"updateRangeDV column $column must be an integral type; use updateWhereDV")
-      val matched = dfT.filter(
-        col(column).isNotNull && col(column) >= lo && col(column) <= hi)
-      val rewritten = applySet(matched, lit(true), set)
-      stageNonEmpty(rewritten, tableDir, Some(column))
-    }
-    // dv the raw positions (already-dv'd rows re-match harmlessly — the
-    // cumulative union dedups; the APPENDED rows above came through dvs)
-    val updated = touched.flatMap { d =>
-      stageDV(spark, tableDir, snap, d,
-        df => df.col(column) >= lit(lo) && df.col(column) <= lit(hi)).map(d -> _)
-    }.toMap
-    publishRebasing(tableDir, snap, "update", Set.empty, staged.toSeq,
-      touched.toSet, AddsKeyDisjoint(column, lo, hi), txnId,
-      dvUpdates = updated)
-  }
-
-  /** Predicate form of [[updateRangeDV]]: no bounds can be proven from
-    * an opaque Column, so every live dir is SCANNED for matching
-    * positions — but no data is rewritten except the matched rows
-    * themselves, which land as one appended dir. NULL predicate keeps
-    * the row unmodified (SQL UPDATE WHERE). */
-  def updateWhereDV(spark: SparkSession, tableDir: String,
-                    predicate: org.apache.spark.sql.Column,
-                    set: Map[String, org.apache.spark.sql.Column],
-                    txnId: Option[String] = None): Long = {
-    import org.apache.spark.sql.functions.{coalesce, lit}
-    txnId.flatMap(findTxn(tableDir, _)) match {
-      case Some(v) => return v
-      case None    =>
-    }
-    val base = latestVersion(tableDir)
-      .getOrElse(throw new IllegalStateException(s"no commits at $tableDir"))
-    val snap = snapshot(tableDir, base)
-    val staged = if (snap.live.isEmpty) None else {
-      val matched = readDirsDV(spark, tableDir, snap, snap.live)
-        .filter(coalesce(predicate, lit(false)))
-      val rewritten = applySet(matched, lit(true), set)
-      stageNonEmpty(rewritten, tableDir, None)
-    }
-    val updated = snap.live.flatMap(d =>
-      stageDV(spark, tableDir, snap, d, _ => predicate).map(d -> _)).toMap
-    publishRebasing(tableDir, snap, "update", Set.empty, staged.toSeq,
-      snap.live.toSet, AddsUnprovable, txnId, dvUpdates = updated)
   }
 
   /** Change-data feed between two snapshots: every row inserted or

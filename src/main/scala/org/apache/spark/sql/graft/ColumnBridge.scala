@@ -17,6 +17,17 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** A sort column's key and ordering: (key, ascending, nulls first). A
+    * plain column sorts ASC NULLS FIRST, Spark's default. */
+  def sortKey(c: Column): (Column, Boolean, Boolean) = {
+    import org.apache.spark.sql.internal.SortOrder
+    c.node match {
+      case s: SortOrder => (new Column(s.child), s.sortDirection == SortOrder.Ascending,
+        s.nullOrdering == SortOrder.NullsFirst)
+      case _ => (c, true, true)
+    }
+  }
   /** A DataFrame over an analyzed logical plan — the SQL-DML dispatch
     * needs the MERGE source (an arbitrary resolved query) back as a
     * frame to hand to the TxnTable op (`Dataset.ofRows`, the same

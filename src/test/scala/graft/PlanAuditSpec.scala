@@ -388,14 +388,20 @@ class PlanAuditSpec extends SparkTestBase {
         p.linesIterator.take(30).mkString("\n"))
   }
 
-  test("q41: dense ids plan exactly ONE window (the tiny offsets frame)") {
-    // the round-7 regression this pins: a per-bucket window for the
-    // local rank made WindowExec hash-redistribute the whole corpus a
-    // second time (2 windows in-plan); the monotonic-index form keeps
-    // the only window on the #partitions-row offsets frame
-    val ops = opTree(plan("q41_dense_ids_scalable"))
-    assert(ops.count(_.startsWith("Window")) == 1,
-      s"dense-id local ranks regressed to a corpus window: $ops")
+  test("q41: dense ids move the corpus once, hashed on the bucket id") {
+    // the round-7 regression this pins: a per-bucket window over a range
+    // exchange redistributed the whole corpus a second time. The ids'
+    // one corpus exchange is now the per-bucket rank window's hash on
+    // `__bkt`; the bucket totals combine map-side before theirs, the
+    // #buckets-row offsets window gathers to one partition, and the
+    // only range exchange is the query's final ORDER BY
+    val p = plan("q41_dense_ids_scalable")
+    val ops = opTree(p)
+    assert(ops.count(_.startsWith("Window")) == 2 && ops.count(_ == "Exchange") == 4 &&
+      "rangepartitioning".r.findAllIn(p).size == 1,
+      s"dense ids moved the corpus more than once: $ops")
+    assert(ops.containsSlice(Seq("HashAggregate", "Exchange", "HashAggregate")),
+      s"bucket totals lost their map-side partial: $ops")
     assert(ops.exists(_.startsWith("BroadcastHashJoin")),
       s"bucket offsets must come back as a broadcast: $ops")
   }

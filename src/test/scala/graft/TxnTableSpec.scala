@@ -967,9 +967,12 @@ class TxnTableSpec extends SparkTestBase {
     TxnTable.mergeDV(spark, dir, Seq((1, "A2")).toDF("id", "v"), Seq("id"))
     assert(rows(dir).sorted ==
       Seq((1, "A2"), (2, "B2"), (3, "c"), (4, "d"), (11, "K2"), (12, "L2"), (99, "new")))
-    // duplicate keys in the batch all land (same as CoW)
-    TxnTable.mergeDV(spark, dir, Seq((50, "x"), (50, "y")).toDF("id", "v"), Seq("id"))
-    assert(rows(dir).count(_._1 == 50) == 2)
+    // a duplicate-key batch is rejected before staging, as in CoW
+    val beforeDup = TxnTable.latestVersion(dir)
+    intercept[IllegalArgumentException] {
+      TxnTable.mergeDV(spark, dir, Seq((50, "x"), (50, "y")).toDF("id", "v"), Seq("id"))
+    }
+    assert(TxnTable.latestVersion(dir) == beforeDup && !rows(dir).exists(_._1 == 50))
     // idempotent under txnId replay
     val vm = TxnTable.mergeDV(spark, dir, Seq((60, "z")).toDF("id", "v"),
       Seq("id"), txnId = Some("m-1"))
@@ -981,7 +984,7 @@ class TxnTableSpec extends SparkTestBase {
     val packed = TxnTable.snapshot(dir, TxnTable.latestVersion(dir).get)
     assert(packed.dvs.isEmpty && packed.live.size == 1)
     assert(rows(dir).sorted == Seq((1, "A2"), (2, "B2"), (3, "c"), (4, "d"),
-      (11, "K2"), (12, "L2"), (50, "x"), (50, "y"), (60, "z"), (99, "new")))
+      (11, "K2"), (12, "L2"), (60, "z"), (99, "new")))
   }
 
   test("mergeInto: ordered WHEN MATCHED clauses, cross-side refs, conditional insert, pruning, NULL keys") {
@@ -2098,6 +2101,72 @@ class TxnTableSpec extends SparkTestBase {
     assert(jobsDuring(TxnTable.deleteWhere(spark, dir, col("id") === 2): Unit) == 1)
     assert(jobsDuring(TxnTable.compact(spark, dir, targetFiles = 1): Unit) == 1)
     assert(rows(dir) == Seq((1, "a"), (3, "c")))
+  }
+
+  test("each DML verb runs its pinned job count on a two-dir stats'd table") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val set = Map("v" -> lit("U"))
+    val verbs: Seq[(String, Int, String => Unit)] = Seq(
+      ("merge", 13, d => TxnTable.merge(spark, d, Seq((2, "B")).toDF("id", "v"), Seq("id"))),
+      // mergeDV checks its batch is key-unique, as merge does: that
+      // aggregate is two jobs (its shuffle stage, then its result)
+      ("mergeDV", 14, d => TxnTable.mergeDV(spark, d, Seq((2, "B")).toDF("id", "v"), Seq("id"))),
+      ("deleteRange", 8, d => TxnTable.deleteRange(spark, d, "id", 2L, 2L)),
+      ("updateRange", 8, d => TxnTable.updateRange(spark, d, "id", 2L, 2L, set)),
+      ("updateWhere", 1, d => TxnTable.updateWhere(spark, d, col("id") === 2, set)),
+      ("deleteRangeDV", 1, d => TxnTable.deleteRangeDV(spark, d, "id", 2L, 2L)),
+      ("deleteWhereDV", 2, d => TxnTable.deleteWhereDV(spark, d, col("id") === 2)),
+      ("updateRangeDV", 9, d => TxnTable.updateRangeDV(spark, d, "id", 2L, 2L, set)),
+      ("deleteKeysEq", 3, d => TxnTable.deleteKeysEq(spark, d, Seq(2).toDF("id"))))
+    val got = verbs.map { case (name, _, run) =>
+      val dir = tmpTable()
+      TxnTable.append(Seq((1, "a"), (2, "b"), (3, "c")).toDF("id", "v").coalesce(1), dir,
+        statsCol = Some("id"))
+      TxnTable.append(Seq((10, "j"), (11, "k")).toDF("id", "v").coalesce(1), dir,
+        statsCol = Some("id"))
+      val n = jobsDuring(run(dir))
+      val ids = rows(dir).map(_._1)
+      assert(ids.filter(_ != 2) == Seq(1, 3, 10, 11), s"$name: $ids")
+      name -> n
+    }
+    info(got.map { case (v, n) => s"$v=$n" }.mkString(", "))
+    assert(got == verbs.map { case (name, n, _) => name -> n })
+  }
+
+  test("range verbs validate the column before pruning, and commit nothing on a bad one") {
+    import org.apache.spark.sql.functions.lit
+    val dated = tmpTable()
+    TxnTable.append(Seq((1, java.sql.Date.valueOf("2024-01-02"))).toDF("id", "d"), dated,
+      statsCol = Some("d"))
+    val empty = tmpTable()
+    TxnTable.create(empty,
+      org.apache.spark.sql.types.StructType.fromDDL("id INT, s STRING"))
+    val set = Map("id" -> lit(0))
+    // a range disjoint from every dir: pruning alone would leave nothing to read
+    for ((dir, c) <- Seq(dated -> "d", empty -> "s", empty -> "nope")) {
+      val before = TxnTable.latestVersion(dir)
+      intercept[IllegalArgumentException](TxnTable.deleteRange(spark, dir, c, 0L, 1L))
+      intercept[IllegalArgumentException](TxnTable.updateRange(spark, dir, c, 0L, 1L, set))
+      intercept[IllegalArgumentException](TxnTable.deleteRangeDV(spark, dir, c, 0L, 1L))
+      intercept[IllegalArgumentException](TxnTable.updateRangeDV(spark, dir, c, 0L, 1L, set))
+      assert(TxnTable.latestVersion(dir) == before, s"a rejected range on $c committed")
+    }
+  }
+
+  test("a merge of only NULL keys rewrites no dir and appends the batch") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val dir = tmpTable()
+    TxnTable.append(Seq((1, "a"), (2, "b")).toDF("id", "v"), dir, statsCol = Some("id"))
+    TxnTable.append(Seq((10, "j")).toDF("id", "v"), dir, statsCol = Some("id"))
+    val pre = TxnTable.snapshot(dir, 1L).live
+    val nulls = Seq((Option.empty[Int], "p")).toDF("id", "v")
+    val v = TxnTable.mergeInto(spark, dir, nulls, Seq("id"),
+      Seq(TxnTable.MatchedUpdate(lit(true), Map("v" -> col("_src_v")))))
+    val live = TxnTable.snapshot(dir, v).live
+    assert(live.take(2) == pre && live.size == 3, s"live after the merge: $live")
+    val live2 = TxnTable.snapshot(dir, TxnTable.merge(spark, dir, nulls, Seq("id"))).live
+    assert(live2.take(3) == live && live2.size == 4, s"live after merge: $live2")
+    assert(TxnTable.read(spark, dir).count() == 5L)
   }
 
   test("mergeInto on a string key is one pass: at most 5 jobs on a one-dir table") {

@@ -20,9 +20,9 @@ class WindowAuditSpec extends AnyFunSuite {
 
   // file -> audited Window.orderBy call-site count
   private val audited = Map(
-    // denseIdsGlobal (dimension-scale by contract), prefixSum offsets
-    // (#partitions rows), denseIdsScalable offsets (#partitions rows)
-    "operators/Windows.scala" -> 3,
+    // denseIdsGlobal (dimension-scale by contract), and the bucket
+    // offsets (#buckets rows) prefixSum and denseIdsScalable share
+    "operators/Windows.scala" -> 2,
     // quantile-bisect rank check, cumulative histogram, 7-day spine —
     // all measurement-harness frames, not declared-query paths
     "tools/ScaleBench.scala" -> 3,

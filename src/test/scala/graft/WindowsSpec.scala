@@ -61,6 +61,49 @@ class WindowsSpec extends SparkTestBase {
     assert(actual(997L) == expected.values.max, "inclusive prefix must end at the total")
   }
 
+  test("prefixSum and denseIdsScalable match their single-partition windows " +
+      "when each range exchange would sample different cut points") {
+    import org.apache.spark.sql.expressions.Window
+    // ±1 values, so a row bucketed one way for its local sum and another
+    // for its offset is off by the net value between the two cuts; a
+    // tiny range-exchange sample over many input partitions makes two
+    // samplings of the same input cut at different keys (with AQE's
+    // coalescing on, an input this small would land in one bucket)
+    val confs = Map("spark.sql.execution.rangeExchange.sampleSizePerPartition" -> "1",
+      "spark.sql.shuffle.partitions" -> "16",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+    val saved = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try for (seed <- Seq(1, 2, 3)) {
+      val rng = new scala.util.Random(seed)
+      val df = rng.shuffle((1 to 2000).toList)
+        .map(k => (if (k % 97 == 0) None else Some(k % 7), k, if (rng.nextBoolean()) 1L else -1L,
+          s"p$k"))
+        .toDF("g", "k", "v", "p").repartition(40)
+      // a DESC key with NULLs (NULLS LAST by default) ahead of a unique key
+      val order = Seq(col("g").desc, col("k"))
+      val all = Window.orderBy(order: _*)
+      val rows = Window.orderBy(order: _*)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      // reading the payload `p` too keeps it out of the totals' exchange
+      // only, so the two sides' range exchanges differ and are not reused
+      def byK(out: org.apache.spark.sql.DataFrame, c: String) =
+        out.select("k", c, "p").collect().map(r => r.getInt(0) -> (r.getLong(1), r.getString(2))).toMap
+      val wantSum = byK(df.withColumn("cs", sum(col("v")).over(rows)), "cs")
+      val wantId = byK(df.withColumn("id", row_number().over(all).cast("long")), "id")
+      def check(op: String, got: Map[Int, (Long, String)], want: Map[Int, (Long, String)]) = {
+        val off = want.filter { case (k, w) => !got.get(k).contains(w) }
+        assert(got.size == want.size && off.isEmpty,
+          s"$op (seed $seed): ${off.size} rows differ, e.g. ${off.take(3)}")
+      }
+      check("prefixSum", byK(Windows.prefixSum(df, order, col("v"), "cs"), "cs"), wantSum)
+      check("denseIdsScalable", byK(Windows.denseIdsScalable(df, order, "id"), "id"), wantId)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
+
   test("topKPerGroup keeps rank<=k with deterministic tie-break") {
     val df = Seq(("g1", 1, 100), ("g1", 2, 100), ("g1", 3, 50), ("g2", 4, 10))
       .toDF("g", "id", "score")
