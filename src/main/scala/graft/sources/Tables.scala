@@ -99,14 +99,29 @@ object Tables {
       if (path.isFile) Array(path)
       else if (path.isDirectory) path.listFiles().filter(_.getName.endsWith(".parquet"))
       else throw new java.io.FileNotFoundException(s"no parquet file or directory at $path")
+    readFooters(files.toSeq)(_.getRecordCount).sum
+  }
+
+  /** The top-level column names of a parquet file, from its footer. */
+  def parquetColumnNames(file: java.io.File): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    readFooters(Seq(file))(_.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSeq).head
+  }
+
+  /** `read` applied to each file's footer, opened on the driver. */
+  private def readFooters[A](files: Seq[java.io.File])(
+      read: org.apache.parquet.hadoop.ParquetFileReader => A): Seq[A] = {
     val conf = new org.apache.hadoop.conf.Configuration(false)
     conf.set("fs.file.impl", classOf[org.apache.hadoop.fs.LocalFileSystem].getName)
+    // built from `conf`: `open(InputFile)` alone would build and parse a
+    // default Hadoop Configuration for every footer it reads
+    val options = org.apache.parquet.HadoopReadOptions.builder(conf).build()
     files.map { f =>
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
         new org.apache.hadoop.fs.Path(f.getAbsolutePath), conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getRecordCount finally r.close()
-    }.sum
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in, options)
+      try read(r) finally r.close()
+    }
   }
 
   /** CSV scan with header + explicit schema; accepts a glob so a year of

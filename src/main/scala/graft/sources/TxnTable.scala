@@ -2038,7 +2038,9 @@ object TxnTable {
     statsCol.foreach(requireStatsable(df, _))
     val staged = s"txn-${UUID.randomUUID()}"
     val dir = new File(dataDir(tableDir), staged)
-    df.write.mode("overwrite").parquet(dir.getPath)
+    // a failed write (a rejected batch) leaves no trace
+    try df.write.mode("overwrite").parquet(dir.getPath)
+    catch { case t: Throwable => deleteRec(dir); throw t }
     import org.apache.spark.sql.functions.{col, count, lit, max, min}
     val back = df.sparkSession.read.schema(df.schema).parquet(dir.getPath)
     val n = statsCol match {
@@ -3054,11 +3056,13 @@ object TxnTable {
     def rows(df: DataFrame): DataFrame
   }
   /** Rows whose `keyCols` tuple appears in `keys`. An `upsert` batch is a
-    * full-row source: it must match the table schema and be key-unique.
-    * Otherwise `keys` holds key columns only, typed as in the table.
-    * `prune = false` plans every live dir. */
+    * full-row source: it must match the table schema and be key-unique,
+    * which [[planDml]] checks unless `uniqueInWrite` (the writer's rewrite
+    * checks it). Otherwise `keys` holds key columns only, typed as in the
+    * table. `prune = false` plans every live dir. */
   private final case class ByKeys(keys: DataFrame, keyCols: Seq[String],
-                                  upsert: Boolean, prune: Boolean = true)
+                                  upsert: Boolean, prune: Boolean = true,
+                                  uniqueInWrite: Boolean = false)
     extends DmlMatch {
     def rows(df: DataFrame): DataFrame = {
       import org.apache.spark.sql.functions.broadcast
@@ -3101,34 +3105,47 @@ object TxnTable {
       if (touched.isEmpty) None else Some(readDirsDV(spark, tableDir, snap, touched))
   }
 
-  /** Enforce the key-unique-source precondition of the upserts: duplicate
-    * source key tuples would fan matched target rows out through the join
-    * and commit duplicated data silently. Delta rejects with "multiple
-    * source rows matched"; so do we, BEFORE any staging — one cheap
-    * aggregate over the (small) batch. NULL-containing tuples are exempt:
-    * they never match a target row (SQL join semantics), so they cannot
-    * fan anything out. */
-  private def requireKeyUnique(source: DataFrame, keyCols: Seq[String],
-                               op: String): Unit = {
-    import org.apache.spark.sql.functions.{col, count, lit}
-    val dup = source
-      .filter(keyCols.map(col(_).isNotNull).reduce(_ && _))
+  /** The key-unique-source precondition of the upserts: duplicate source
+    * key tuples would fan matched target rows out through the join and
+    * commit duplicated data silently. Delta rejects with "multiple source
+    * rows matched"; so do we, with this message naming the key tuple
+    * (`tuple` is `c=value, ...`). NULL-containing tuples are exempt: they
+    * never match a target row (SQL join semantics), so they cannot fan
+    * anything out. */
+  private def duplicateKeyMessage(verb: String, tuple: String): String =
+    s"$verb: $duplicateKey ($tuple) — the source must be key-unique; dedup upstream"
+  private val duplicateKey = "multiple source rows matched the same key"
+
+  /** ONE aggregate over an upsert batch, before any staging: it rejects a
+    * duplicate non-NULL key tuple ([[duplicateKeyMessage]]) and, with
+    * `bounds`, returns the [min, max] of the integral first key over the
+    * tuples that can match (None when none can). The batch is read by one
+    * task (the upsert premise is a small batch against big files), so the
+    * per-key count and the global aggregate over it need no exchange: one
+    * job. */
+  private def checkUpsertKeys(keys: DataFrame, keyCols: Seq[String], verb: String,
+                              bounds: Boolean): Option[(Long, Long)] = {
+    import org.apache.spark.sql.functions.{col, count, first, lit, max, min, struct, when}
+    val k = col(keyCols.head).cast("long")
+    val aggs = first(when(col("_n") > 1L, struct(keyCols.map(col): _*)), ignoreNulls = true) +:
+      (if (bounds) Seq(min(k), max(k)) else Nil)
+    val r = keys.filter(keyCols.map(col(_).isNotNull).reduce(_ && _)).coalesce(1)
       .groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("_n"))
-      .filter(col("_n") > 1L).limit(1).collect()
-    if (dup.nonEmpty) {
-      val tup = keyCols.zipWithIndex
-        .map { case (c, i) => s"$c=${dup.head.get(i)}" }.mkString(", ")
-      throw new IllegalArgumentException(
-        s"$op: multiple source rows matched the same key ($tup) — " +
-          "the source must be key-unique; dedup upstream")
+      .agg(aggs.head, aggs.tail: _*).head()
+    if (!r.isNullAt(0)) {
+      val dup = r.getStruct(0)
+      throw new IllegalArgumentException(duplicateKeyMessage(verb,
+        keyCols.indices.map(i => s"${keyCols(i)}=${dup.get(i)}").mkString(", ")))
     }
+    if (!bounds || r.isNullAt(1)) None else Some((r.getLong(1), r.getLong(2)))
   }
 
   /** The one DML planner: replay a committed `txnId`, pin the base, check
     * the match's columns, and plan it ([[DmlPlan]]) for `write`.
     *  - keys: manifest-stats pruning by the batch keys' [min, max] (ONE
-    *    aggregate over the batch), only for an integral first key — a
-    *    non-integral key's long-cast bounds are not sound (see
+    *    aggregate over the batch, which also checks an upsert batch is
+    *    key-unique: [[checkUpsertKeys]]), only for an integral first key —
+    *    a non-integral key's long-cast bounds are not sound (see
     *    [[isIntegral]]). The bounds double as the proof that a
     *    winner-added dir holds no matched row. A batch with no non-NULL
     *    key matches nothing and touches no dir.
@@ -3154,14 +3171,12 @@ object TxnTable {
     def plan(touched: Seq[String], check: WinnerAddCheck, statsCol: Option[String]) =
       new DmlPlan(spark, tableDir, snap, touched, check, statsCol)
     write(m match {
-      case ByKeys(keys, keyCols, upsert, prune) =>
+      case ByKeys(keys, keyCols, upsert, prune, uniqueInWrite) =>
         // AFTER the base is pinned: the first evaluation of the caller's
         // batch happens once the snapshot is fixed (callers may sequence
         // side effects on it; the conflict test relies on this)
-        if (upsert) {
-          enforceSchema(keys, tableDir) // upserts cannot drift the schema
-          requireKeyUnique(keys, keyCols, verb)
-        } else effectiveSchema(tableDir, snap).foreach { st =>
+        if (upsert) enforceSchema(keys, tableDir) // upserts cannot drift the schema
+        else effectiveSchema(tableDir, snap).foreach { st =>
           // a mistyped anti-join would silently delete nothing
           keyCols.foreach { c =>
             require(st.fieldNames.contains(c), s"no column $c in the table schema")
@@ -3173,7 +3188,8 @@ object TxnTable {
         val hasStats = prune && isIntegral(keys, key) &&
           snap.live.exists(d => snap.stats.get(d).exists(_.exists(_._1 == key)))
         val bounds =
-          if (!hasStats) None
+          if (upsert && !uniqueInWrite) checkUpsertKeys(keys, keyCols, verb, hasStats)
+          else if (!hasStats) None
           else {
             val r = keys.agg(min(col(key).cast("long")), max(col(key).cast("long"))).head()
             if (r.isNullAt(0)) None else Some((r.getLong(0), r.getLong(1)))
@@ -3391,7 +3407,12 @@ object TxnTable {
     * (no schema drift); all SETs of a clause evaluate against the
     * PRE-IMAGE. NULL keys never match (SQL join semantics): a NULL-key
     * target row keeps, a NULL-key source row inserts. Source must be
-    * key-unique and match the table schema exactly. Same base+1 /
+    * key-unique and match the table schema exactly. Uniqueness is checked
+    * inside the rewrite, as Delta's MERGE does: a window counts each
+    * key's source rows over the join's own hash exchange on the key (no
+    * extra job), and a duplicate non-NULL key fails the write, which
+    * deletes its staged dir and throws `IllegalArgumentException`
+    * naming the key. Same base+1 /
     * [[CommitConflict]] / txnId-idempotency contract as [[merge]]; reads
     * THROUGH dvs, so a dv'd row cannot resurrect; CDC surfaces the
     * effects as delete+insert pairs. */
@@ -3403,21 +3424,29 @@ object TxnTable {
                   org.apache.spark.sql.functions.lit(true),
                 txnId: Option[String] = None,
                 whenNotMatchedBySource: Seq[MatchedClause] = Nil): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, when}
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{coalesce, col, concat_ws, count, format_string,
+      lit, raise_error, when}
     (whenMatched ++ whenNotMatchedBySource).foreach {
       case MatchedUpdate(_, set) => require(!keyCols.exists(set.contains),
         "SET on a merge key is not supported — delete + insert instead")
       case _ => ()
     }
-    val m = ByKeys(source, keyCols, upsert = true, prune = whenNotMatchedBySource.isEmpty)
+    val m = ByKeys(source, keyCols, upsert = true, prune = whenNotMatchedBySource.isEmpty,
+      uniqueInWrite = true)
     planDml(spark, tableDir, "mergeInto", m, txnId) { p =>
       val current = p.read.getOrElse(source.limit(0))
       val tgtCols = current.columns.toSeq
       val srcRenamed = source.select(
         keyCols.map(source.col) ++
           tgtCols.filterNot(keyCols.contains).map(c => source.col(c).as(s"_src_$c")): _*)
+      // the source's rows per key, counted by a window partitioned on the
+      // key: it runs over the join's hash exchange, so it adds no job
+      val srcDup = count(lit(1)).over(Window.partitionBy(keyCols.map(col): _*)) > 1L &&
+        keyCols.map(col(_).isNotNull).reduce(_ && _)
       val joined = current.withColumn("_tgt", lit(true))
-        .join(srcRenamed.withColumn("_src", lit(true)), keyCols.toSeq, "full_outer")
+        .join(srcRenamed.withColumn("_src", lit(true)).withColumn("_dup", srcDup),
+          keyCols.toSeq, "full_outer")
       val isTgt = col("_tgt").isNotNull
       val isSrc = col("_src").isNotNull
       // first-true-condition-wins fold: NULL condition = not fired (SQL).
@@ -3443,14 +3472,33 @@ object TxnTable {
       val keep = (isTgt && isSrc && !deletes(whenMatched)) ||
         (isTgt && !isSrc && !deletes(whenNotMatchedBySource)) ||
         (!isTgt && lit(insertNotMatched) && fires(insertCond))
-      val rewritten = joined.filter(keep).select(tgtCols.map(c =>
+      // a duplicate source key fails the filter, whatever the clauses: the
+      // filter is one CASE over both sides, so no rule can turn the outer
+      // join into one that drops unmatched source rows unchecked
+      val rejectDup = raise_error(format_string(duplicateKeyMessage("mergeInto", "%s"),
+        concat_ws(", ", keyCols.map(c => concat_ws("=", lit(c), col(c).cast("string"))): _*)))
+      val rewritten = joined.filter(when(coalesce(col("_dup"), lit(false)), rejectDup)
+        .otherwise(keep)).select(tgtCols.map(c =>
         (if (keyCols.contains(c)) col(c) // the coalesced USING-join key
          else when(isTgt && isSrc, valueIn(whenMatched, c))
            .when(isTgt, valueIn(whenNotMatchedBySource, c))
            .otherwise(col(s"_src_$c").cast(current.schema(c).dataType))).as(c)): _*)
-      writeCopyOnWrite(tableDir, p, "merge", txnId, Some(rewritten))
+      try writeCopyOnWrite(tableDir, p, "merge", txnId, Some(rewritten))
+      catch {
+        case e: Exception => throw raisedMessage(e)
+          .filter(_.contains(duplicateKey))
+          .map(new IllegalArgumentException(_)).getOrElse(e)
+      }
     }
   }
+
+  /** The message of a `raise_error` that failed `e`'s job, from its cause
+    * chain. */
+  private def raisedMessage(e: Throwable): Option[String] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).collectFirst {
+      case t: org.apache.spark.SparkThrowable if t.getCondition == "USER_RAISED_EXCEPTION" =>
+        t.getMessageParameters.get("errorMessage")
+    }
 
   /** Row-level DELETE of a key range (copy-on-write): removes every row
     * whose `column` value lies in [lo, hi], as ONE atomic commit, WITH
@@ -4182,11 +4230,15 @@ object TxnTable {
     * If every live dir carries a stats sidecar on the same column, the
     * packed dir re-derives that sidecar so merge/read pruning survives
     * compaction.
+    *
+    * A table with nothing to pack ([[isPacked]]) is a no-op returning
+    * `base`: no job and no commit (Delta's OPTIMIZE of a compacted table).
     */
   def compact(spark: SparkSession, tableDir: String, targetFiles: Int): Long = {
     val base = latestVersion(tableDir)
       .getOrElse(throw new IllegalStateException(s"no commits at $tableDir"))
     val snap = snapshot(tableDir, base)
+    if (isPacked(tableDir, snap, targetFiles)) return base
     // preserve pruning metadata: only if ALL live dirs agree on a stats
     // column is the packed dir's recomputed sidecar sound
     val df = read(spark, tableDir, Some(base)).coalesce(targetFiles)
@@ -4201,6 +4253,27 @@ object TxnTable {
     publishRebasing(tableDir, snap, "compact", snap.live.toSet, Seq(staged),
       snap.live.toSet, AddsIgnored, None)
   }
+
+  /** Whether [[compact]] would only copy `snap`: its one live dir is the
+    * table's own (not a shallow clone's reference) and holds at most
+    * `targetFiles` parquet files, no deletion vector or equality delete is
+    * left to materialize, and the dir was written under the current
+    * schema — its `.cols` era on a table with field ids, else its footer's
+    * columns (an added column is not backfilled yet). Driver metadata
+    * only: a listing and at most one footer. */
+  private def isPacked(tableDir: String, snap: Snapshot, targetFiles: Int): Boolean =
+    snap.live match {
+      case Seq(d) if !d.contains('/') && snap.dvs.isEmpty && snap.eqs.isEmpty =>
+        val files = Option(new File(dataDir(tableDir), d).listFiles()).getOrElse(Array.empty[File])
+          .filter(_.getName.endsWith(".parquet"))
+        files.length <= targetFiles && snap.schema.map(structOf).forall { cur =>
+          val names = cur.fieldNames.toSeq
+          if (snap.fids.nonEmpty)
+            colsOf(tableDir, d).contains((cur.catalogString, names.map(snap.fids.getOrElse(_, -1))))
+          else files.headOption.forall(f => Tables.parquetColumnNames(f) == names)
+        }
+      case _ => false
+    }
 
   /** PARTITION-SCOPED compaction (Delta's `OPTIMIZE … WHERE`): rewrite
     * ONLY the dirs carrying `partCol = value` into one bin-packed dir;

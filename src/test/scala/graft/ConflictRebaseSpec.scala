@@ -57,6 +57,13 @@ class ConflictRebaseSpec extends SparkTestBase {
     TxnTable.append((0 until 8).map(k => (k, s"r$k")).toDF("id", "v"), dir,
       statsCol = Some("id")): Unit
 
+  /** [[seed]] as two files, so a compaction of it has packing to do on any
+    * core count (a packed table's compaction is a no-op that never
+    * publishes, so no winner would run). */
+  private def seedUnpacked(dir: String): Unit =
+    TxnTable.append((0 until 8).map(k => (k, s"r$k")).toDF("id", "v").repartition(2), dir,
+      statsCol = Some("id")): Unit
+
   test("merge rebases past a stats-disjoint blind append: both land, no retry") {
     val dir = tmpTable()
     seed(dir) // v0, key bounds [0, 7]
@@ -234,7 +241,7 @@ class ConflictRebaseSpec extends SparkTestBase {
 
   test("compact rebases past appends: packed dir and winner rows coexist") {
     val dir = tmpTable()
-    seed(dir)
+    seedUnpacked(dir)
     val v = raced(dir) {
       TxnTable.append(Seq((50, "w")).toDF("id", "v"), dir): Unit // no stats needed
     } {
@@ -248,7 +255,7 @@ class ConflictRebaseSpec extends SparkTestBase {
 
   test("compact conflicts when a winner rewrote a dir it read (round-8 shape)") {
     val dir = tmpTable()
-    seed(dir)
+    seedUnpacked(dir)
     intercept[TxnTable.CommitConflict] {
       raced(dir) {
         TxnTable.deleteWhere(spark, dir, col("id") === 0): Unit // rewrites all
@@ -262,7 +269,7 @@ class ConflictRebaseSpec extends SparkTestBase {
 
   test("compact conflicts when a winner dv'd a dir it read") {
     val dir = tmpTable()
-    seed(dir)
+    seedUnpacked(dir)
     intercept[TxnTable.CommitConflict] {
       raced(dir) {
         TxnTable.deleteRangeDV(spark, dir, "id", 0L, 0L): Unit // dv on d0

@@ -422,6 +422,9 @@ class TxnTableSpec extends SparkTestBase {
     TxnTable.append(Seq((-1, "seed")).toDF("id", "v"), dir)
     val rounds = 8
     (0 until rounds).foreach { r =>
+      // a fragment first, so every round's compaction has packing to do
+      // (on a packed table it is a no-op that never reaches the race)
+      TxnTable.append(Seq((100 + r, s"frag$r")).toDF("id", "v"), dir)
       val t = new Thread(() =>
         TxnTable.append(Seq((r, s"race$r")).toDF("id", "v"), dir): Unit)
       t.start()
@@ -1658,25 +1661,40 @@ class TxnTableSpec extends SparkTestBase {
   test("merge/mergeInto reject a duplicate-key source (Delta's 'multiple " +
       "source rows matched'); NULL-key duplicates are exempt") {
     import org.apache.spark.sql.functions.lit
+    import TxnTable.MatchedUpdate
     val dir = tmpTable()
-    TxnTable.append(Seq((1, "a"), (2, "b")).toDF("id", "v"), dir)
-    val dup = Seq((1, "x"), (1, "y")).toDF("id", "v")
+    TxnTable.append(Seq((1, "a"), (2, "b")).toDF("id", "v"), dir, statsCol = Some("id"))
     val before = rows(dir)
-    intercept[IllegalArgumentException] {
-      TxnTable.merge(spark, dir, dup, Seq("id"))
+    val dirsBefore = dataDirs(dir)
+    def rejects(what: String, key: Int)(merge: => Long): Unit = {
+      val e = intercept[IllegalArgumentException](merge: Unit)
+      assert(e.getMessage.contains(s"multiple source rows matched the same key (id=$key)"),
+        s"$what: ${e.getMessage}")
+      assert(TxnTable.latestVersion(dir).contains(0L), s"a rejected $what committed")
+      assert(dataDirs(dir) == dirsBefore, s"a rejected $what left a dir under data/")
     }
-    intercept[IllegalArgumentException] {
-      TxnTable.mergeInto(spark, dir, dup, Seq("id"),
-        whenMatched = Seq(TxnTable.MatchedUpdate(lit(true),
-          Map("v" -> lit("z")))))
-    }
+    val upd = Seq(MatchedUpdate(lit(true), Map("v" -> lit("z"))))
+    val dup = Seq((1, "x"), (1, "y")).toDF("id", "v")
+    rejects("merge", 1)(TxnTable.merge(spark, dir, dup, Seq("id")))
+    rejects("mergeDV", 1)(TxnTable.mergeDV(spark, dir, dup, Seq("id")))
+    rejects("mergeInto", 1)(TxnTable.mergeInto(spark, dir, dup, Seq("id"), upd))
+    // duplicates that match no target row and that no clause keeps
+    val unmatched = Seq((1, "x"), (7, "p"), (7, "q")).toDF("id", "v")
+    rejects("mergeInto without inserts", 7)(TxnTable.mergeInto(spark, dir, unmatched,
+      Seq("id"), upd, insertNotMatched = false))
+    // the keys' bounds miss the only dir's stats: planning touches no dir
+    val disjoint = Seq((50, "x"), (50, "y")).toDF("id", "v")
+    rejects("mergeInto of untouched keys", 50)(TxnTable.mergeInto(spark, dir, disjoint,
+      Seq("id"), upd))
     assert(rows(dir) == before, "a rejected merge left a trace")
-    assert(TxnTable.latestVersion(dir) == Some(0L), "a rejected merge committed")
     // NULL-key rows never match a target — duplicates among them are legal
     val nullDup = Seq((Option.empty[Int], "p"), (Option.empty[Int], "q"))
       .toDF("id", "v")
     TxnTable.merge(spark, dir, nullDup, Seq("id"))
-    assert(TxnTable.read(spark, dir).count() == 4L)
+    TxnTable.mergeInto(spark, dir, nullDup, Seq("id"), upd)
+    TxnTable.mergeDV(spark, dir, nullDup, Seq("id"))
+    assert(TxnTable.latestVersion(dir).contains(3L))
+    assert(TxnTable.read(spark, dir).count() == 8L)
   }
 
   test("latestVersion survives a checkpoint pointer naming a vacuumed manifest") {
@@ -2091,7 +2109,7 @@ class TxnTableSpec extends SparkTestBase {
     sn.live.map(sn.nrows).sum - sn.live.flatMap(sn.dvs.get).map(sn.nrows).sum
   }
 
-  test("a read builds with no job; deleteWhere and compact are one write job each") {
+  test("a packed table's compact is 0 jobs and returns the base") {
     import org.apache.spark.sql.functions.col
     val dir = tmpTable()
     TxnTable.append(Seq((1, "a"), (2, "b"), (3, "c")).toDF("id", "v").coalesce(1), dir)
@@ -2099,18 +2117,31 @@ class TxnTableSpec extends SparkTestBase {
       "the first commit did not record its schema")
     assert(jobsDuring(TxnTable.read(spark, dir): Unit) == 0)
     assert(jobsDuring(TxnTable.deleteWhere(spark, dir, col("id") === 2): Unit) == 1)
-    assert(jobsDuring(TxnTable.compact(spark, dir, targetFiles = 1): Unit) == 1)
+    // the delete left one dir of one file: nothing to pack
+    var v = -1L
+    assert(jobsDuring { v = TxnTable.compact(spark, dir, targetFiles = 1) } == 0)
+    assert(v == 1L && TxnTable.latestVersion(dir).contains(1L), s"compact returned $v")
     assert(rows(dir) == Seq((1, "a"), (3, "c")))
+  }
+
+  test("a two-dir table's compact is one write job") {
+    val dir = tmpTable()
+    TxnTable.append(Seq((1, "a"), (2, "b")).toDF("id", "v").coalesce(1), dir)
+    TxnTable.append(Seq((3, "c")).toDF("id", "v").coalesce(1), dir)
+    var v = -1L
+    assert(jobsDuring { v = TxnTable.compact(spark, dir, targetFiles = 1) } == 1)
+    assert(v == 2L && TxnTable.snapshot(dir, v).live.size == 1)
+    assert(rows(dir) == Seq((1, "a"), (2, "b"), (3, "c")))
   }
 
   test("each DML verb runs its pinned job count on a two-dir stats'd table") {
     import org.apache.spark.sql.functions.{col, lit}
     val set = Map("v" -> lit("U"))
     val verbs: Seq[(String, Int, String => Unit)] = Seq(
-      ("merge", 13, d => TxnTable.merge(spark, d, Seq((2, "B")).toDF("id", "v"), Seq("id"))),
-      // mergeDV checks its batch is key-unique, as merge does: that
-      // aggregate is two jobs (its shuffle stage, then its result)
-      ("mergeDV", 14, d => TxnTable.mergeDV(spark, d, Seq((2, "B")).toDF("id", "v"), Seq("id"))),
+      // merge and mergeDV check their batch is key-unique and take its key
+      // bounds in one aggregate: one job
+      ("merge", 10, d => TxnTable.merge(spark, d, Seq((2, "B")).toDF("id", "v"), Seq("id"))),
+      ("mergeDV", 11, d => TxnTable.mergeDV(spark, d, Seq((2, "B")).toDF("id", "v"), Seq("id"))),
       ("deleteRange", 8, d => TxnTable.deleteRange(spark, d, "id", 2L, 2L)),
       ("updateRange", 8, d => TxnTable.updateRange(spark, d, "id", 2L, 2L, set)),
       ("updateWhere", 1, d => TxnTable.updateWhere(spark, d, col("id") === 2, set)),
@@ -2169,7 +2200,7 @@ class TxnTableSpec extends SparkTestBase {
     assert(TxnTable.read(spark, dir).count() == 5L)
   }
 
-  test("mergeInto on a string key is one pass: at most 5 jobs on a one-dir table") {
+  test("mergeInto on a string key is one pass: at most 3 jobs on a one-dir table") {
     import org.apache.spark.sql.functions.{col, lit}
     val dir = tmpTable()
     TxnTable.append((1 to 40).map(i => (f"S$i%03d", i.toLong)).toDF("sale", "amt")
@@ -2178,7 +2209,7 @@ class TxnTableSpec extends SparkTestBase {
     val n = jobsDuring(TxnTable.mergeInto(spark, dir, src, Seq("sale"),
       Seq(TxnTable.MatchedUpdate(lit(true), Map("amt" -> col("_src_amt"))))): Unit)
     info(s"mergeInto: $n jobs")
-    assert(n <= 5, s"mergeInto ran $n jobs")
+    assert(n <= 3, s"mergeInto ran $n jobs")
     val got = TxnTable.read(spark, dir).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got.size == 41 && got("S002") == 200L && got("S010") == 1000L &&
       got("S900") == 9L && got("S003") == 3L, s"got $got")
@@ -2251,13 +2282,17 @@ class TxnTableSpec extends SparkTestBase {
     check("mergeInto")
     TxnTable.deleteWhere(spark, dir, col("id") === 7)
     check("deleteWhere")
-    TxnTable.compact(spark, dir, targetFiles = 1)
+    // a second dir, so the compaction has packing to do and commits
+    TxnTable.append(Seq((40, "forty")).toDF("id", "v"), dir, statsCol = Some("id"))
+    check("second append")
+    val cv = TxnTable.compact(spark, dir, targetFiles = 1)
+    assert(TxnTable.snapshot(dir, cv).action == "compact")
     check("compact")
     TxnTable.deleteRangeDV(spark, dir, "id", 10L, 12L)
     check("deleteRangeDV")
     TxnTable.mergeDV(spark, dir, Seq((1, "one")).toDF("id", "v"), Seq("id"))
     check("mergeDV")
-    assert(TxnTable.read(spark, dir).count() == 17L)
+    assert(TxnTable.read(spark, dir).count() == 18L)
     // an eq delete's key count is its dir's own sidecar (the manifest
     // records which dirs it applies to, not a count)
     val before = dataDirs(dir)
